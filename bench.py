@@ -191,15 +191,31 @@ def compact_fullscale(fullscale: dict) -> dict:
     return out
 
 
+# Optional stdout keys, shed in this order when the line would overflow
+# the capture window. Both live in full elsewhere: the fullscale record
+# in PIPELINE_FULLSCALE.json, the diagnostics in the BENCH_local.json
+# sidecar (value_diagnostics keeps their total on the line).
+SHED_ORDER = ("energy_pipeline_fullscale", "diagnostics")
+
+
 def emit_line(out: dict, limit: int = 2000) -> str:
-    """One-line JSON for stdout, guaranteed under `limit` bytes as long
-    as the mandatory keys fit: the fullscale summary is the only
-    optional payload and is dropped first (it lives in the sidecar and
-    in PIPELINE_FULLSCALE.json regardless)."""
+    """One-line JSON for stdout, under `limit` bytes as long as the
+    mandatory keys fit: the SHED_ORDER keys are dropped one at a time
+    until the line fits. Each drop leaves a `<key>_dropped: true`
+    marker and a stderr warning, so a shed (or a line still over the
+    limit) shows at run time rather than as a truncated record."""
     line = json.dumps(out)
+    for key in SHED_ORDER:
+        if len(line) <= limit:
+            break
+        if key in out:
+            out = {**{k: v for k, v in out.items() if k != key}, f"{key}_dropped": True}
+            line = json.dumps(out)
+            print(f"bench: dropped {key!r} from the stdout line to fit {limit} bytes",
+                  file=sys.stderr)
     if len(line) > limit:
-        out = {k: v for k, v in out.items() if k != "energy_pipeline_fullscale"}
-        line = json.dumps(out)
+        print(f"bench: stdout line is {len(line)} bytes, over the {limit}-byte limit",
+              file=sys.stderr)
     return line
 
 

@@ -22,6 +22,12 @@ import sys
 from pyspark.sql import functions as F
 
 
+def _row_count() -> dict:
+    """Row count observed IN a stage's write (`writers.write_observed`):
+    every stage prints its count without a read-back pass."""
+    return {"rows": F.count(F.lit(1))}
+
+
 def _spark(args):
     from smart_energy_consumption_analytics_using_big_data_spark import get_spark
 
@@ -38,8 +44,8 @@ def cmd_ingest(args) -> None:
 
     spark = _spark(args)
     raw = readers.read_csv(spark, args.readings, READINGS_CSV_SCHEMA)
-    writers.write_parquet(raw, f"{args.out}/raw_energy_data")
-    print(json.dumps({"stage": "ingest", "rows": spark.read.parquet(f"{args.out}/raw_energy_data").count()}))
+    rows = writers.write_parquet_observed(raw, f"{args.out}/raw_energy_data", _row_count())["rows"]
+    print(json.dumps({"stage": "ingest", "rows": rows}))
 
 
 def _load_tariffs(spark, path: str):
@@ -59,10 +65,10 @@ def cmd_preprocess(args) -> None:
 
     spark = _spark(args)
     raw = spark.read.parquet(f"{args.out}/raw_energy_data")
-    energy.preprocess_to_parquet(
+    daily_rows = energy.preprocess_to_parquet(
         spark, raw, _load_tariffs(spark, args.tariffs), f"{args.out}/hourly", f"{args.out}/daily"
     )
-    print(json.dumps({"stage": "preprocess", "daily_rows": spark.read.parquet(f"{args.out}/daily").count()}))
+    print(json.dumps({"stage": "preprocess", "daily_rows": daily_rows}))
 
 
 def cmd_features(args) -> None:
@@ -73,8 +79,8 @@ def cmd_features(args) -> None:
     spark = _spark(args)
     daily = spark.read.parquet(f"{args.out}/daily")
     features = energy.engineer_features(daily)
-    writers.write_parquet(features, f"{args.out}/energy_features")
-    print(json.dumps({"stage": "features", "rows": spark.read.parquet(f"{args.out}/energy_features").count()}))
+    rows = writers.write_parquet_observed(features, f"{args.out}/energy_features", _row_count())["rows"]
+    print(json.dumps({"stage": "features", "rows": rows}))
 
 
 def _ml_features(spark, out_dir: str):
@@ -95,39 +101,34 @@ def cmd_forecast(args) -> None:
     from smart_energy_consumption_analytics_using_big_data_spark.sources import writers
 
     spark = _spark(args)
-    feats = _ml_features(spark, args.out).cache()
-    lr = FC.train_linear_forecast(feats, args.test_cutoff, args.val_cutoff)
-    rf = FC.train_rf_forecast(feats, args.test_cutoff)
-    best = lr if lr.metrics["rmse"] <= rf.metrics["rmse"] else rf
+    fc = FC.train_best_forecast(_ml_features(spark, args.out), args.test_cutoff, args.val_cutoff)
+    best = fc.result
     preds = best.predictions.select("user_id", "date", "label_value", "prediction")
     writers.write_parquet(preds, f"{args.out}/forecasting_results", num_files=8)
     model_dir = f"{args.out}/models/best"
     best.model.write().overwrite().save(model_dir)
-    _write_model_metadata(model_dir, best, "lr" if best is lr else "rf", feats, args.test_cutoff)
-    print(json.dumps({"stage": "forecast", "best": "lr" if best is lr else "rf",
+    _write_model_metadata(model_dir, fc)
+    print(json.dumps({"stage": "forecast", "best": fc.name,
                       "metrics": {k: round(v, 4) for k, v in best.metrics.items()}}))
 
 
-def _write_model_metadata(model_dir: str, best, best_name: str, feats, test_cutoff: str) -> None:
-    """Persist best-model metadata next to the saved model
-    (`forecasting_model.py:561-571` parity: json for machines, txt with
-    the reference's field names for humans)."""
+def _write_model_metadata(model_dir: str, fc) -> None:
+    """Persist best-model metadata (an `ml.forecast.BestForecast`) next
+    to the saved model (`forecasting_model.py:561-571` parity: json for
+    machines, txt with the reference's field names for humans)."""
     import datetime
     import pathlib
 
     from smart_energy_consumption_analytics_using_big_data_spark.ml.forecast import FEATURE_COLS
 
-    counts = feats.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.sum((F.col("date") >= test_cutoff).cast("long")).alias("test"),
-    ).collect()[0]
+    best_name, best = fc.name, fc.result
     meta = {
         "best_model": best_name,
         "metrics": {k: round(v, 6) for k, v in best.metrics.items()},
         "best_params": best.best_params,
         "n_features": len(FEATURE_COLS),
-        "train_records": int(counts["total"] - counts["test"]),
-        "test_records": int(counts["test"]),
+        "train_records": fc.train_records,
+        "test_records": fc.test_records,
         "trained_on": datetime.datetime.now().strftime("%Y-%m-%d %H:%M:%S"),
     }
     root = pathlib.Path(model_dir)
@@ -162,18 +163,19 @@ def cmd_anomaly(args) -> None:
         joined,
         feature_cols=["label_value", "lag_1", "rolling_avg_7r", "day_of_week", "residual"],
     )
-    out_rows = scored.count()
-    writers.write_parquet(scored, f"{args.out}/anomalies",
-                          num_files=max(20, out_rows // 50_000) if out_rows else 1)
-    # flagged count from the WRITTEN parquet: counting the lazy `scored`
-    # would run the K-Means transform + join DAG a third time (the
-    # energy_bench stage-5 lesson, ADVICE r9)
-    flagged = (
-        spark.read.parquet(f"{args.out}/anomalies")
-        .filter(F.col("is_anomaly") == 1)
-        .count()
+    # Rows and flags are observed in the write: any action on the lazy
+    # `scored` would run the K-Means transform + join DAG once more (the
+    # energy_bench stage-5 lesson, ADVICE r9). The file count is sized
+    # from the daily row count instead (a column-free scan of the small
+    # daily parquet), which bounds the scored rows from above.
+    daily_rows = spark.read.parquet(f"{args.out}/daily").count()
+    counts = writers.write_parquet_observed(
+        scored,
+        f"{args.out}/anomalies",
+        {**_row_count(), "flagged": F.count(F.when(F.col("is_anomaly") == 1, 1))},
+        num_files=writers.target_partitions(daily_rows),
     )
-    print(json.dumps({"stage": "anomaly", "rows": out_rows, "flagged": flagged}))
+    print(json.dumps({"stage": "anomaly", "rows": counts["rows"], "flagged": counts["flagged"]}))
 
 
 def cmd_export(args) -> None:
@@ -194,24 +196,17 @@ def cmd_export(args) -> None:
     )
     merged = merge_for_export(anomalies, preds.select("user_id", "date", "prediction"),
                               daily, keys=("user_id", "date"))
-    writers.write_csv(merged, f"{args.out}/export_csv", num_files=1)
-    # Row count from the written CSV, not the lazy 3-way join.  multiLine
-    # matches the writer's default quoting: a quoted field with an embedded
-    # newline is one record, not two (ADVICE r10).
-    exported = (
-        spark.read.option("header", True)
-        .option("multiLine", True)
-        .csv(f"{args.out}/export_csv")
-        .count()
-    )
+    # row count observed in the write, not a second run of the 3-way join
+    exported = writers.write_observed(
+        writers.write_csv, merged, f"{args.out}/export_csv", _row_count(), num_files=1
+    )["rows"]
     # MongoDB hand-off instructions, mirroring the reference's
     # create_mongodb_import_instructions (`merge_csv_for_mongodb.py:
     # 162-186`): the import itself is an external mongoimport
     # invocation (no Mongo driver in-process), but the user gets the
     # exact commands against the file Spark wrote. Written ONE LEVEL
     # ABOVE the CSV sink dir: a .txt inside it would be parsed as data
-    # by any directory-level CSV reader (Spark only skips _/. files) —
-    # including this function's own row-count read above.
+    # by any directory-level CSV reader (Spark only skips _/. files).
     import glob as _glob
     import pathlib as _pathlib
 

@@ -12,15 +12,16 @@ so no feature leaks the label.
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field
 
 from pyspark.ml import Pipeline, PipelineModel
-from pyspark.ml.evaluation import RegressionEvaluator
 from pyspark.ml.feature import StandardScaler, VectorAssembler
 from pyspark.ml.regression import LinearRegression, RandomForestRegressor
 from pyspark.sql import DataFrame, functions as F
 
 from smart_energy_consumption_analytics_using_big_data_spark.operators import windows as W
+from smart_energy_consumption_analytics_using_big_data_spark.session import thread_map
 
 SEED = 42  # forecasting_model.py:366 pins 42 everywhere
 
@@ -67,13 +68,85 @@ class ForecastResult:
     model: PipelineModel = field(repr=False, default=None)
 
 
-def _pipeline(estimator) -> Pipeline:
-    """assembler -> scaler -> model (M1/M2/M8; `forecasting_model.py:231-232`)."""
+def _prep(rows: DataFrame) -> PipelineModel:
+    """assembler -> scaler (M1/M2/M8; `forecasting_model.py:231-232`),
+    fitted on one training split. Every model fitted on that split
+    shares it: one scaler pass per split, not one per grid point."""
     assembler = VectorAssembler(
         inputCols=FEATURE_COLS, outputCol="features_raw", handleInvalid="skip"
     )
     scaler = StandardScaler(inputCol="features_raw", outputCol="features")
-    return Pipeline(stages=[assembler, scaler, estimator])
+    return Pipeline(stages=[assembler, scaler]).fit(rows)
+
+
+def _metrics(preds: DataFrame) -> dict[str, float]:
+    """MAE, RMSE and R² of ``prediction`` against ``label_value`` in ONE
+    aggregate pass, with `RegressionEvaluator`'s definitions (R² against
+    the label mean; NaN on an empty frame) - the evaluator costs one
+    full pass over the predictions per metric."""
+    err = F.col("label_value") - F.col("prediction")
+    n = F.count(F.lit(1))
+    row = preds.agg(
+        n.alias("n"),
+        F.sum(F.abs(err)).alias("sae"),
+        F.sum(err * err).alias("sse"),
+        (F.var_samp("label_value") * (n - 1)).alias("sst"),
+    ).first()
+    if not row["n"]:
+        return {"mae": math.nan, "rmse": math.nan, "r2": math.nan}
+    return {
+        "mae": row["sae"] / row["n"],
+        "rmse": math.sqrt(row["sse"] / row["n"]),
+        "r2": 1 - row["sse"] / row["sst"] if row["sst"] else math.nan,
+    }
+
+
+def _grid_search(train: DataFrame, val_cutoff, estimator, grid: list[tuple]) -> tuple:
+    """Inner time-split validation (`forecasting_model.py:286-306`):
+    fit ``estimator(*point)`` on the train rows before ``val_cutoff``,
+    score RMSE on the rest, return the first point with the lowest
+    score. NaN (empty/degenerate validation rows) counts as worst, so
+    the pick does not depend on grid position.
+
+    Grid points fit CONCURRENTLY: Spark's scheduler interleaves jobs
+    submitted from multiple driver threads over the same cached
+    vectors. The reference ran its 9+4 grid strictly sequentially
+    (`forecasting_model.py:286-306` - SURVEY.md SS3 "no parallel
+    tuning"); on a cluster this is the difference between grid time
+    = slowest point vs = sum of points."""
+    inner_train = train.filter(F.col("date") < F.lit(val_cutoff))
+    prep = _prep(inner_train)
+    fit_rows = prep.transform(inner_train).cache()
+    val_rows = prep.transform(train.filter(F.col("date") >= F.lit(val_cutoff))).cache()
+
+    def score(point):
+        rmse = _metrics(estimator(*point).fit(fit_rows).transform(val_rows))["rmse"]
+        return rmse if rmse == rmse else math.inf
+
+    try:
+        scores = thread_map(train.sparkSession, score, grid)
+    finally:
+        fit_rows.unpersist()
+        val_rows.unpersist()
+    return grid[scores.index(min(scores))]
+
+
+def _refit(train: DataFrame, test: DataFrame, estimator, params: dict) -> ForecastResult:
+    """Fit assembler -> scaler -> ``estimator`` on ``train`` (persisted
+    as one PipelineModel) and score it on the held-out ``test`` rows."""
+    prep = _prep(train)
+    model = PipelineModel(stages=[*prep.stages, estimator.fit(prep.transform(train))])
+    preds = model.transform(test)
+    return ForecastResult(
+        predictions=preds, metrics=_metrics(preds), best_params=params, model=model
+    )
+
+
+def _split(features: DataFrame, test_cutoff) -> tuple[DataFrame, DataFrame]:
+    return (
+        features.filter(F.col("date") < F.lit(test_cutoff)),
+        features.filter(F.col("date") >= F.lit(test_cutoff)),
+    )
 
 
 def train_linear_forecast(
@@ -85,57 +158,20 @@ def train_linear_forecast(
 ) -> ForecastResult:
     """Grid-searched LinearRegression with inner time-split validation
     (`forecasting_model.py:272-320`)."""
-    train = features.filter(F.col("date") < F.lit(test_cutoff))
-    test = features.filter(F.col("date") >= F.lit(test_cutoff))
-    inner_train = train.filter(F.col("date") < F.lit(val_cutoff))
-    inner_val = train.filter(F.col("date") >= F.lit(val_cutoff))
+    train, test = _split(features, test_cutoff)
     train.cache()
-    inner_train.cache()
-    inner_val.cache()
 
-    # Grid points fit CONCURRENTLY: Spark's scheduler interleaves jobs
-    # submitted from multiple driver threads over the same cached
-    # inputs. The reference ran its 9+4 grid strictly sequentially
-    # (`forecasting_model.py:286-306` - SURVEY.md SS3 "no parallel
-    # tuning"); on a cluster this is the difference between grid time
-    # = slowest point vs = sum of points. Selection stays deterministic:
-    # results keep grid order and min() takes the first minimum.
-    from concurrent.futures import ThreadPoolExecutor
-
-    grid = [(reg, en) for reg in reg_params for en in elastic_net_params]
-
-    def fit_point(point):
-        reg, en = point
-        lr = LinearRegression(
+    def linear(reg, en):
+        return LinearRegression(
             featuresCol="features", labelCol="label_value",
             maxIter=100, regParam=reg, elasticNetParam=en,
         )
-        model = _pipeline(lr).fit(inner_train)
-        rmse = RegressionEvaluator(
-            labelCol="label_value", predictionCol="prediction", metricName="rmse"
-        ).evaluate(model.transform(inner_val))
-        return rmse, {"regParam": reg, "elasticNetParam": en}
 
-    with ThreadPoolExecutor(max_workers=min(4, len(grid))) as ex:
-        results = list(ex.map(fit_point, grid))
-    params = min(results, key=lambda r: r[0])[1]
-    final = _pipeline(
-        LinearRegression(
-            featuresCol="features", labelCol="label_value", maxIter=100,
-            regParam=params["regParam"], elasticNetParam=params["elasticNetParam"],
-        )
-    ).fit(train)
-    preds = final.transform(test)
-    metrics = {
-        name: RegressionEvaluator(
-            labelCol="label_value", predictionCol="prediction", metricName=name
-        ).evaluate(preds)
-        for name in ("mae", "rmse", "r2")
-    }
+    grid = [(reg, en) for reg in reg_params for en in elastic_net_params]
+    reg, en = _grid_search(train, val_cutoff, linear, grid)
+    result = _refit(train, test, linear(reg, en), {"regParam": reg, "elasticNetParam": en})
     train.unpersist()
-    inner_train.unpersist()
-    inner_val.unpersist()
-    return ForecastResult(predictions=preds, metrics=metrics, best_params=params, model=final)
+    return result
 
 
 def train_gbt_forecast(
@@ -150,28 +186,14 @@ def train_gbt_forecast(
     is exposed here as an explicit option)."""
     from pyspark.ml.regression import GBTRegressor
 
-    train = features.filter(F.col("date") < F.lit(test_cutoff))
+    train, test = _split(features, test_cutoff)
     if sample_fraction is not None:
         train = train.sample(fraction=sample_fraction, seed=SEED)
-    test = features.filter(F.col("date") >= F.lit(test_cutoff))
     gbt = GBTRegressor(
         featuresCol="features", labelCol="label_value",
         maxIter=max_iter, maxDepth=max_depth, seed=SEED,
     )
-    model = _pipeline(gbt).fit(train)
-    preds = model.transform(test)
-    metrics = {
-        name: RegressionEvaluator(
-            labelCol="label_value", predictionCol="prediction", metricName=name
-        ).evaluate(preds)
-        for name in ("mae", "rmse", "r2")
-    }
-    return ForecastResult(
-        predictions=preds,
-        metrics=metrics,
-        best_params={"maxIter": max_iter, "maxDepth": max_depth},
-        model=model,
-    )
+    return _refit(train, test, gbt, {"maxIter": max_iter, "maxDepth": max_depth})
 
 
 def train_rf_forecast(
@@ -187,57 +209,69 @@ def train_rf_forecast(
     ``grid``: optional ((numTrees, maxDepth), ...) searched with the
     same inner time-split validation as the LR path (the reference's RF
     grid is {50,100}x{5,10}, `forecasting_model.py:350-355`); requires
-    ``val_cutoff``. Grid points fit concurrently over the shared cached
-    inner split; selection keeps grid order (first minimum wins), so it
-    is deterministic. ``grid=None`` keeps the single-point fit."""
-    train = features.filter(F.col("date") < F.lit(test_cutoff))
-    test = features.filter(F.col("date") >= F.lit(test_cutoff))
+    ``val_cutoff``. ``grid=None`` keeps the single-point fit."""
+    train, test = _split(features, test_cutoff)
+
+    def forest(n_t, depth):
+        return RandomForestRegressor(
+            featuresCol="features", labelCol="label_value",
+            numTrees=n_t, maxDepth=depth, seed=SEED,
+        )
+
     if grid:
         if val_cutoff is None:
             raise ValueError("grid search needs val_cutoff for the inner split")
-        from concurrent.futures import ThreadPoolExecutor
-
-        inner_train = train.filter(F.col("date") < F.lit(val_cutoff))
-        inner_val = train.filter(F.col("date") >= F.lit(val_cutoff))
-        inner_train.cache()
-        inner_val.cache()
-
-        def fit_point(point):
-            n_t, depth = point
-            cand = RandomForestRegressor(
-                featuresCol="features", labelCol="label_value",
-                numTrees=n_t, maxDepth=depth, seed=SEED,
-            )
-            m = _pipeline(cand).fit(inner_train)
-            rmse = RegressionEvaluator(
-                labelCol="label_value", predictionCol="prediction", metricName="rmse"
-            ).evaluate(m.transform(inner_val))
-            # NaN rmse (empty/degenerate inner_val) compares false against
-            # everything, which would make min() return a position-dependent
-            # grid point; treat it as worst-possible so first-minimum-wins
-            # selection stays deterministic.
-            return (rmse if rmse == rmse else float("inf")), point
-
-        with ThreadPoolExecutor(max_workers=min(4, len(grid))) as ex:
-            results = list(ex.map(fit_point, grid))
-        num_trees, max_depth = min(results, key=lambda r: r[0])[1]
-        inner_train.unpersist()
-        inner_val.unpersist()
-    rf = RandomForestRegressor(
-        featuresCol="features", labelCol="label_value",
-        numTrees=num_trees, maxDepth=max_depth, seed=SEED,
+        num_trees, max_depth = _grid_search(train, val_cutoff, forest, list(grid))
+    return _refit(
+        train, test, forest(num_trees, max_depth),
+        {"numTrees": num_trees, "maxDepth": max_depth},
     )
-    model = _pipeline(rf).fit(train)
-    preds = model.transform(test)
-    metrics = {
-        name: RegressionEvaluator(
-            labelCol="label_value", predictionCol="prediction", metricName=name
-        ).evaluate(preds)
-        for name in ("mae", "rmse", "r2")
-    }
-    return ForecastResult(
-        predictions=preds,
-        metrics=metrics,
-        best_params={"numTrees": num_trees, "maxDepth": max_depth},
-        model=model,
+
+
+@dataclass
+class BestForecast:
+    name: str  # "lr" or "rf"
+    result: ForecastResult
+    train_records: int
+    test_records: int
+
+
+def train_best_forecast(
+    features: DataFrame,
+    test_cutoff,
+    val_cutoff,
+    lr_grid: tuple[tuple[float, ...], tuple[float, ...]] | None = None,
+    rf_grid: tuple[tuple[int, int], ...] | None = None,
+) -> BestForecast:
+    """Stage 4 (`forecasting_model.py:158-606`): the LR grid against RF,
+    best by held-out RMSE (LR on a tie).
+
+    ``features`` is cached and materialized once - the same pass counts
+    the train/test split for the model metadata - and the two searches
+    then run on two driver threads: they are independent until the
+    pick, so Spark schedules the RF fits into executor slots the LR
+    tail leaves free. Each fit sees the same cached rows with pinned
+    seeds, so models, metrics and the pick equal the sequential order.
+    ``lr_grid`` is ``(reg_params, elastic_net_params)`` for
+    `train_linear_forecast`, ``rf_grid`` the ``grid`` of
+    `train_rf_forecast`; ``None`` keeps each one's default."""
+    features = features.cache()
+    counts = features.agg(
+        F.count(F.lit(1)).alias("total"),
+        F.sum((F.col("date") >= F.lit(test_cutoff)).cast("long")).alias("test"),
+    ).first()
+    lr, rf = thread_map(
+        features.sparkSession,
+        lambda fit: fit(),
+        [
+            lambda: train_linear_forecast(features, test_cutoff, val_cutoff, *(lr_grid or ())),
+            lambda: train_rf_forecast(features, test_cutoff, grid=rf_grid, val_cutoff=val_cutoff),
+        ],
+    )
+    name, best = ("lr", lr) if lr.metrics["rmse"] <= rf.metrics["rmse"] else ("rf", rf)
+    return BestForecast(
+        name=name,
+        result=best,
+        train_records=int(counts["total"] - counts["test"]),
+        test_records=int(counts["test"]),
     )

@@ -188,7 +188,7 @@ def preprocess_to_parquet(
     hourly_path: str,
     daily_path: str,
     daily_files: int = 4,
-) -> None:
+) -> int:
     """Stage 2 with parquet handoff: write hourly, then derive daily
     FROM THE JUST-WRITTEN HOURLY PARQUET rather than from the lazy
     hourly DataFrame.
@@ -201,6 +201,8 @@ def preprocess_to_parquet(
     reference's per-process disk handoff (`data_preprocessing.py`
     derives daily after persisting hourly), and keeps results
     bit-identical (daily_rollup is a pure re-aggregate of hourly).
+
+    Returns the daily row count, observed in the daily write.
     """
     from smart_energy_consumption_analytics_using_big_data_spark.sources import writers
 
@@ -211,7 +213,10 @@ def preprocess_to_parquet(
     # shuffle_for_files: coalesce(4) would run the hourly->daily re-agg
     # itself in 4 tasks (86M input rows at full scale, measured ~36 s);
     # repartition keeps the agg wide and shuffles only the daily rows.
-    writers.write_parquet(daily, daily_path, num_files=daily_files, shuffle_for_files=True)
+    return writers.write_parquet_observed(
+        daily, daily_path, {"rows": F.count(F.lit(1))},
+        num_files=daily_files, shuffle_for_files=True,
+    )["rows"]
 
 
 def merge_for_export(

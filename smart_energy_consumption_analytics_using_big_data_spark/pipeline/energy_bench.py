@@ -246,45 +246,25 @@ def run_pipeline_bench(
         "date",
         F.col("daily_energy_kwh").alias("label_value"),
     )
-    feats = FC.add_forecast_features(daily_ml, entity="user_id").cache()
-    # The LR and RF searches are independent until the `best` pick, so
-    # they run from two driver threads (guide §2.6: Spark schedules
-    # concurrent jobs FIFO, the RF fits back-fill executors freed by
-    # the LR tail — the grid POINTS inside each family already overlap
-    # this way, r3). Each fit sees the same cached `feats` with its
-    # pinned seed, so models, metrics, and the selection are
-    # byte-identical to the sequential order (verified: rmse/params
+    feats = FC.add_forecast_features(daily_ml, entity="user_id")
+    # The LR and RF searches overlap on two driver threads over `feats`
+    # materialized once (FC.train_best_forecast). Models, metrics and
+    # the selection equal the sequential order (verified: rmse/params
     # signature equality across interleaved reps in
     # scripts/probe_r16_forecast_overlap_ab.py, and flags/RMSE on the
     # full-scale anchor).
-    from concurrent.futures import ThreadPoolExecutor
-
     if grid == "reference":
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            lr_f = ex.submit(
-                FC.train_linear_forecast,
-                feats,
-                test_cutoff,
-                val_cutoff,
-                reg_params=(0.01, 0.1, 1.0),
-                elastic_net_params=(0.0, 0.5, 1.0),
-            )
-            rf_f = ex.submit(
-                FC.train_rf_forecast,
-                feats,
-                test_cutoff,
-                grid=((50, 5), (50, 10), (100, 5), (100, 10)),
-                val_cutoff=val_cutoff,
-            )
-            lr, rf = lr_f.result(), rf_f.result()
+        fc = FC.train_best_forecast(
+            feats,
+            test_cutoff,
+            val_cutoff,
+            lr_grid=((0.01, 0.1, 1.0), (0.0, 0.5, 1.0)),
+            rf_grid=((50, 5), (50, 10), (100, 5), (100, 10)),
+        )
     else:
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            lr_f = ex.submit(FC.train_linear_forecast, feats, test_cutoff, val_cutoff)
-            rf_f = ex.submit(FC.train_rf_forecast, feats, test_cutoff)
-            lr, rf = lr_f.result(), rf_f.result()
-    best = lr if lr.metrics["rmse"] <= rf.metrics["rmse"] else rf
+        fc = FC.train_best_forecast(feats, test_cutoff, val_cutoff)
     writers.write_parquet(
-        best.predictions.select("user_id", "date", "label_value", "prediction"),
+        fc.result.predictions.select("user_id", "date", "label_value", "prediction"),
         f"{out}/forecasting_results",
         num_files=8,
     )
@@ -304,17 +284,15 @@ def run_pipeline_bench(
         joined,
         feature_cols=["label_value", "lag_1", "rolling_avg_7r", "day_of_week", "residual"],
     )
-    writers.write_parquet(scored, f"{out}/anomalies")
-    # count the flags from the parquet just written, NOT from `scored`:
-    # counting the lazy DataFrame would re-execute the whole K-Means
-    # transform + join DAG a second time inside the timed window,
-    # inflating the stage vs the reference's single-pass 0.88-min
-    # baseline (ADVICE r9).
-    flagged = (
-        spark.read.parquet(f"{out}/anomalies")
-        .filter(F.col("is_anomaly") == 1)
-        .count()
-    )
+    # flags observed IN the write: counting the lazy `scored` would
+    # re-execute the whole K-Means transform + join DAG a second time
+    # inside the timed window, inflating the stage vs the reference's
+    # single-pass 0.88-min baseline (ADVICE r9).
+    flagged = writers.write_parquet_observed(
+        scored,
+        f"{out}/anomalies",
+        {"flagged": F.count(F.when(F.col("is_anomaly") == 1, 1))},
+    )["flagged"]
     stages["anomaly"] = time.time() - t0
     feats.unpersist()
 
@@ -327,6 +305,6 @@ def run_pipeline_bench(
         "range_start": range_start,
         "generator": generator,
         "flagged": flagged,
-        "best_model": "lr" if best is lr else "rf",
-        "rmse": round(best.metrics["rmse"], 4),
+        "best_model": fc.name,
+        "rmse": round(fc.result.metrics["rmse"], 4),
     }

@@ -71,3 +71,23 @@ def get_spark(
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
+
+
+def thread_map(spark: SparkSession, fn, items) -> list:
+    """``[fn(x) for x in items]`` on up to 4 driver threads, results
+    in input order. Spark interleaves jobs submitted from several driver
+    threads, so independent actions overlap on the executors. Each
+    thread inherits the caller's local properties (job group,
+    description, scheduler pool) through `inheritable_thread_target`,
+    so the overlapped jobs stay attributed to the stage that started
+    them."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    items = list(items)
+    wrap = inheritable_thread_target(spark)
+    # outside pinned-thread mode the wrapper hands the session back
+    target = fn if wrap is spark else wrap(fn)
+    with ThreadPoolExecutor(max_workers=max(1, min(4, len(items)))) as ex:
+        return list(ex.map(target, items))

@@ -51,16 +51,9 @@ def write_parquet(
     writer.parquet(path)
 
 
-def write_parquet_observed(
-    df: DataFrame,
-    path: str,
-    metrics: dict[str, Column],
-    mode: str = "overwrite",
-    compression: str = "snappy",
-    num_files: int | None = None,
-    partition_by: list[str] | None = None,
-) -> dict:
-    """Parquet sink with export QC metrics observed IN the write job.
+def write_observed(write, df: DataFrame, path: str, metrics: dict[str, Column], **kwargs) -> dict:
+    """``write(df, path, **kwargs)`` with QC metrics observed IN the
+    write job.
 
     ``metrics`` maps name -> aggregate Column (count/sum/null-rate...);
     `DataFrame.observe` attaches them as accumulator-style aggregates
@@ -71,16 +64,14 @@ def write_parquet_observed(
     observed values after the write commits.
     """
     obs = Observation("export_metrics")
-    observed = df.observe(obs, *[c.alias(n) for n, c in metrics.items()])
-    write_parquet(
-        observed,
-        path,
-        mode=mode,
-        compression=compression,
-        num_files=num_files,
-        partition_by=partition_by,
-    )
+    write(df.observe(obs, *[c.alias(n) for n, c in metrics.items()]), path, **kwargs)
     return dict(obs.get)
+
+
+def write_parquet_observed(df: DataFrame, path: str, metrics: dict[str, Column], **kwargs) -> dict:
+    """`write_parquet` (same keyword options) with ``metrics`` observed
+    in the write job; see `write_observed`."""
+    return write_observed(write_parquet, df, path, metrics, **kwargs)
 
 
 def write_csv(

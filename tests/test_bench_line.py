@@ -70,10 +70,36 @@ def test_emitted_line_fits_capture_window():
     assert set(parsed["queries"]) == set(bench.BENCH_QUERIES)
 
 
-def test_emit_line_guard_drops_only_fullscale():
+def test_emit_line_guard_drops_only_fullscale(capsys):
     out = _representative_line()
-    # force the guard with an artificially low limit: the fullscale
-    # summary goes, every other key stays
-    slim = json.loads(bench.emit_line(out, limit=10))
+    # force the guard with a limit that dropping the fullscale summary
+    # alone meets: the fullscale summary goes, every other key stays
+    rest = {k: v for k, v in out.items() if k != "energy_pipeline_fullscale"}
+    limit = len(json.dumps({**rest, "energy_pipeline_fullscale_dropped": True}))
+    slim = json.loads(bench.emit_line(out, limit=limit))
     assert "energy_pipeline_fullscale" not in slim
-    assert set(slim) == set(out) - {"energy_pipeline_fullscale"}
+    assert slim["energy_pipeline_fullscale_dropped"] is True
+    assert set(slim) == set(out) - {"energy_pipeline_fullscale"} | {
+        "energy_pipeline_fullscale_dropped"
+    }
+    assert "energy_pipeline_fullscale" in capsys.readouterr().err
+
+
+def test_emit_line_sheds_second_key_for_oversized_payload(capsys):
+    """A payload still over the limit without the fullscale summary
+    also sheds the diagnostics map, marks both drops and warns."""
+    out = _representative_line()
+    out["diagnostics"] = {f"q_padding_{i:04d}": 99.999 for i in range(200)}
+    rest = {k: v for k, v in out.items() if k not in bench.SHED_ORDER}
+    markers = {f"{k}_dropped": True for k in bench.SHED_ORDER}
+    limit = len(json.dumps({**rest, **markers}))
+    line = bench.emit_line(out, limit=limit)
+    assert len(line) <= limit
+    slim = json.loads(line)
+    assert set(slim) == set(rest) | set(markers)
+    assert slim["value_diagnostics"] == out["value_diagnostics"]
+    err = capsys.readouterr().err
+    assert "energy_pipeline_fullscale" in err and "diagnostics" in err
+    # an impossible limit keeps the mandatory keys and says so
+    assert json.loads(bench.emit_line(out, limit=10))["metric"] == "headline_suite_total"
+    assert "over the 10-byte limit" in capsys.readouterr().err

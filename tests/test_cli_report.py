@@ -52,6 +52,78 @@ def test_model_metadata_persisted(pipeline_out):
     assert "Best Model:" in txt and "RMSE:" in txt and "Training Records:" in txt
 
 
+def test_forecast_grid_jobs_carry_caller_job_group(spark, pipeline_out):
+    """Grid points fit on driver threads; every job they run must carry
+    the job group (and so the description) set by the caller."""
+    from smart_energy_consumption_analytics_using_big_data_spark.ml import forecast as FC
+
+    sc = spark.sparkContext
+    feats = cli._ml_features(spark, pipeline_out).cache()
+    feats.count()
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("forecast-grid-test", "linear grid under a caller's group")
+    try:
+        FC.train_linear_forecast(feats, "2013-02-20", "2013-02-10")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        feats.unpersist()
+    # 4 grid points, each at least a fit and a scoring job
+    assert len(tracker.getJobIdsForGroup("forecast-grid-test")) >= 8
+    # no new ungrouped job (old ones may be evicted from the status store)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
+def test_best_forecast_matches_sequential_fits(spark, pipeline_out):
+    """The overlapped LR/RF helper picks the same model, parameters and
+    metrics as fitting LR and then RF one after the other."""
+    from smart_energy_consumption_analytics_using_big_data_spark.ml import forecast as FC
+
+    feats = cli._ml_features(spark, pipeline_out).cache()
+    try:
+        lr = FC.train_linear_forecast(feats, "2013-02-20", "2013-02-10")
+        rf = FC.train_rf_forecast(feats, "2013-02-20")
+        fc = FC.train_best_forecast(feats, "2013-02-20", "2013-02-10")
+        n_test = feats.filter("date >= '2013-02-20'").count()
+        n_total = feats.count()
+    finally:
+        feats.unpersist()
+    name, seq = ("lr", lr) if lr.metrics["rmse"] <= rf.metrics["rmse"] else ("rf", rf)
+    assert fc.name == name
+    assert fc.result.best_params == seq.best_params
+    assert fc.result.metrics == seq.metrics
+    assert (fc.train_records, fc.test_records) == (n_total - n_test, n_test)
+    meta = json.loads(open(f"{pipeline_out}/models/best/model_metadata.json").read())
+    assert meta["best_model"] == name
+    assert meta["metrics"] == {k: round(v, 6) for k, v in seq.metrics.items()}
+
+
+def test_build_report_is_deterministic(spark, pipeline_out):
+    """Concurrent panels: two builds on the same inputs give the same
+    JSON, key order included."""
+    from smart_energy_consumption_analytics_using_big_data_spark.pipeline import report as RPT
+
+    def build() -> str:
+        return json.dumps(
+            RPT.build_report(
+                spark.read.parquet(f"{pipeline_out}/daily"),
+                spark.read.parquet(f"{pipeline_out}/energy_features"),
+                spark.read.parquet(f"{pipeline_out}/anomalies"),
+                {"best_model": "lr"},
+            )
+        )
+
+    first = build()
+    assert first == build()
+    assert list(json.loads(first)) == [
+        "kpi", "model", "consumption_profiles", "top_feature_correlations",
+        "monthly_anomaly_rate", "top_anomalous_entities", "anomalies_by_weekday",
+        "cluster_profile", "qq_residuals", "error_histogram", "error_by_day",
+        "error_vs_actual",
+    ]
+
+
 def test_report_kpis_match_parquet(spark, pipeline_out, capsys):
     from pyspark.sql import functions as F
 
@@ -364,11 +436,13 @@ def test_cli_tokenize_exports_merges_vocab_and_summary(spark, tmp_path, capsys):
 
 
 def test_cli_all_runs_whole_chain_in_one_invocation(
-    readings_fixture, tariffs_fixture, tmp_path_factory, capsys
+    spark, readings_fixture, tariffs_fixture, tmp_path_factory, capsys
 ):
     """The `all` subcommand — the reference's run_pipeline.ps1 analogue
     (one process, all seven stages, shared SparkSession) — must emit
-    every stage's JSON line and leave every stage artifact on disk."""
+    every stage's JSON line and leave every stage artifact on disk.
+    Each printed row count is observed in the stage's write, so it must
+    equal a count read back from that stage's artifact."""
     out = str(tmp_path_factory.mktemp("cli_all"))
     tariffs_csv = str(tmp_path_factory.mktemp("tariffs_all") / "tariffs.csv")
     tariffs_fixture.to_csv(tariffs_csv, index=False)
@@ -391,6 +465,17 @@ def test_cli_all_runs_whole_chain_in_one_invocation(
     ]
     stages = [rec["stage"] for rec in lines if "stage" in rec]
     assert stages == ["ingest", "preprocess", "features", "forecast", "anomaly", "export"]
+    printed = {rec["stage"]: rec for rec in lines if "stage" in rec}
+    anomalies = spark.read.parquet(f"{out}/anomalies")
+    # multiLine matches the writer's quoting: a quoted field with an
+    # embedded newline is one record
+    exported = spark.read.option("header", True).option("multiLine", True).csv(f"{out}/export_csv")
+    assert printed["ingest"]["rows"] == spark.read.parquet(f"{out}/raw_energy_data").count()
+    assert printed["preprocess"]["daily_rows"] == spark.read.parquet(f"{out}/daily").count()
+    assert printed["features"]["rows"] == spark.read.parquet(f"{out}/energy_features").count()
+    assert printed["anomaly"]["rows"] == anomalies.count() > 0
+    assert printed["anomaly"]["flagged"] == anomalies.filter("is_anomaly = 1").count()
+    assert printed["export"]["rows"] == exported.count()
     assert any("kpi" in rec for rec in lines)  # report tail
     import os
 
@@ -402,7 +487,7 @@ def test_cli_all_runs_whole_chain_in_one_invocation(
     # the mongoimport hand-off instructions point at the CSV Spark
     # actually wrote (`merge_csv_for_mongodb.py:162-186` parity), and
     # live OUTSIDE the CSV sink dir so directory-level CSV readers
-    # (incl. cmd_export's own row-count read) never parse them as data
+    # (incl. the read-back count above) never parse them as data
     instructions = open(f"{out}/mongodb_import_instructions.txt").read()
     assert "mongoimport --db smart_energy --collection energy_data" in instructions
     import glob
