@@ -16,6 +16,7 @@ from pyspark.ml.clustering import KMeans
 from pyspark.ml.feature import StandardScaler, VectorAssembler
 from pyspark.ml.functions import vector_to_array
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import DoubleType
 
 from smart_energy_consumption_analytics_using_big_data_spark.operators.windows import (
     with_partition_zscore,
@@ -58,6 +59,16 @@ def detect_anomalies(
     # execution is JIT/codegen-dominated); on a cluster each avoided
     # pass is a full scan of the feature lineage.
     features = features.persist()
+    # VectorAssembler casts each non-double input under an alias that
+    # embeds its random uid, so every call would generate (and compile)
+    # new code. Cast here instead, and restore the input types on the
+    # output below so the scored schema does not change.
+    recast = {
+        f.name: f.dataType
+        for f in features.schema
+        if f.name in feature_cols and f.dataType != DoubleType()
+    }
+    features = features.withColumns({c: F.col(c).cast("double") for c in recast})
     assembler = VectorAssembler(inputCols=feature_cols, outputCol="features_raw", handleInvalid="skip")
     scaler = StandardScaler(inputCol="features_raw", outputCol="features")
     prep = Pipeline(stages=[assembler, scaler]).fit(features)
@@ -86,4 +97,6 @@ def detect_anomalies(
     scored = scored.withColumn(
         "is_anomaly", (F.coalesce(F.col("z_score"), F.lit(0.0)) > z_threshold).cast("int")
     )
-    return scored.drop("features_raw", "features")
+    return scored.drop("features_raw", "features").withColumns(
+        {c: F.col(c).cast(t) for c, t in recast.items()}
+    )

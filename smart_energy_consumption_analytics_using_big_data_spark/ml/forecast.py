@@ -143,6 +143,13 @@ def _refit(train: DataFrame, test: DataFrame, estimator, params: dict) -> Foreca
 
 
 def _split(features: DataFrame, test_cutoff) -> tuple[DataFrame, DataFrame]:
+    """Train and test rows, every feature as double. VectorAssembler
+    casts other inputs (the int calendar features) under aliases that
+    embed its random uid, so each `_prep` would generate and compile new
+    code; with double inputs its plans repeat and hit the codegen cache.
+    (Not cast before `train_best_forecast`'s cache: `cli.cmd_anomaly`
+    rebuilds that plan and reuses the cached rows.)"""
+    features = features.withColumns({c: F.col(c).cast("double") for c in FEATURE_COLS})
     return (
         features.filter(F.col("date") < F.lit(test_cutoff)),
         features.filter(F.col("date") >= F.lit(test_cutoff)),

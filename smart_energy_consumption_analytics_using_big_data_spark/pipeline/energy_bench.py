@@ -250,9 +250,9 @@ def run_pipeline_bench(
     # The LR and RF searches overlap on two driver threads over `feats`
     # materialized once (FC.train_best_forecast). Models, metrics and
     # the selection equal the sequential order (verified: rmse/params
-    # signature equality across interleaved reps in
-    # scripts/probe_r16_forecast_overlap_ab.py, and flags/RMSE on the
-    # full-scale anchor).
+    # signature equality across interleaved reps, and flags/RMSE on the
+    # full-scale anchor; OPTIMIZATION_r16.md, "Pipeline stage 4: LR and
+    # RF searches overlapped").
     if grid == "reference":
         fc = FC.train_best_forecast(
             feats,

@@ -442,7 +442,8 @@ def test_cli_all_runs_whole_chain_in_one_invocation(
     (one process, all seven stages, shared SparkSession) — must emit
     every stage's JSON line and leave every stage artifact on disk.
     Each printed row count is observed in the stage's write, so it must
-    equal a count read back from that stage's artifact."""
+    equal a count read back from that stage's artifact. Rerunning stages
+    afterwards in the same session must compile no new generated class."""
     out = str(tmp_path_factory.mktemp("cli_all"))
     tariffs_csv = str(tmp_path_factory.mktemp("tariffs_all") / "tariffs.csv")
     tariffs_fixture.to_csv(tariffs_csv, index=False)
@@ -495,3 +496,11 @@ def test_cli_all_runs_whole_chain_in_one_invocation(
     csv_part = glob.glob(f"{out}/export_csv/*.csv")[0]
     assert csv_part in instructions
     assert not glob.glob(f"{out}/export_csv/*.txt")
+    # A warm rerun in the same session compiles no new generated class:
+    # the codegen cache holds the chain's working set, and the ML stages'
+    # plans do not change from one run to the next.
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    before = compiles.getCount()
+    cli.main(["ingest", "--readings", readings_fixture, "--out", out])
+    cli.main(["forecast", "--out", out, "--test-cutoff", "2013-02-20", "--val-cutoff", "2013-02-10"])
+    assert compiles.getCount() == before

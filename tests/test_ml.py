@@ -34,9 +34,11 @@ def test_rf_forecast_runs_and_beats_naive(features):
 
 
 def test_anomaly_rate_band_and_threshold(features):
-    scored = AN.detect_anomalies(
-        features, feature_cols=["label_value", "lag_1", "rolling_avg_7r", "day_of_week"]
-    ).cache()
+    cols = ["label_value", "lag_1", "rolling_avg_7r", "day_of_week"]
+    scored = AN.detect_anomalies(features, feature_cols=cols).cache()
+    # each feature column keeps its input dtype (an int day_of_week stays int)
+    assert dict(features.dtypes)["day_of_week"] == "int"
+    assert [dict(scored.dtypes)[c] for c in cols] == [dict(features.dtypes)[c] for c in cols]
     n = scored.count()
     flagged = scored.filter(F.col("is_anomaly") == 1)
     rate = flagged.count() / n
