@@ -10,7 +10,10 @@ SparkSession when chained via `all`:
 
 Individual stages read/write Parquet at the given paths, so users can
 still materialize between stages exactly like the reference - it is
-just no longer mandatory.
+just no longer mandatory. The five stage subcommands print the record
+of `pipeline.energy.run_ingest` ... `run_anomaly`, the same functions
+the bench anchor (`pipeline/energy_bench.py`) times; `export` and
+`report` read the stage artifacts that module lays out.
 """
 
 from __future__ import annotations
@@ -21,11 +24,7 @@ import sys
 
 from pyspark.sql import functions as F
 
-
-def _row_count() -> dict:
-    """Row count observed IN a stage's write (`writers.write_observed`):
-    every stage prints its count without a read-back pass."""
-    return {"rows": F.count(F.lit(1))}
+from smart_energy_consumption_analytics_using_big_data_spark.pipeline import energy
 
 
 def _spark(args):
@@ -35,170 +34,44 @@ def _spark(args):
 
 
 def cmd_ingest(args) -> None:
-    """CSV -> typed Parquet (`data_ingestion.py:40-209`): one multi-path
-    scan, explicit schema, sentinel-aware - no inferSchema pass."""
-    from smart_energy_consumption_analytics_using_big_data_spark.sources import readers, writers
-    from smart_energy_consumption_analytics_using_big_data_spark.sources.schemas import (
-        READINGS_CSV_SCHEMA,
-    )
-
-    spark = _spark(args)
-    raw = readers.read_csv(spark, args.readings, READINGS_CSV_SCHEMA)
-    rows = writers.write_parquet_observed(raw, f"{args.out}/raw_energy_data", _row_count())["rows"]
-    print(json.dumps({"stage": "ingest", "rows": rows}))
-
-
-def _load_tariffs(spark, path: str):
-    from smart_energy_consumption_analytics_using_big_data_spark.sources import readers
-    from smart_energy_consumption_analytics_using_big_data_spark.sources.schemas import (
-        TARIFFS_SCHEMA,
-    )
-
-    if path.endswith((".xlsx", ".xls")):
-        return readers.read_excel_dim(spark, path, expected_columns=["TariffDateTime", "Tariff"])
-    return readers.read_csv(spark, path, TARIFFS_SCHEMA, null_value=None)
+    print(json.dumps(energy.run_ingest(_spark(args), args.out, args.readings)))
 
 
 def cmd_preprocess(args) -> None:
-    """clean + tariff join + hourly/daily rollups (`data_preprocessing.py:88-305`)."""
-    from smart_energy_consumption_analytics_using_big_data_spark.pipeline import energy
-
-    spark = _spark(args)
-    raw = spark.read.parquet(f"{args.out}/raw_energy_data")
-    daily_rows = energy.preprocess_to_parquet(
-        spark, raw, _load_tariffs(spark, args.tariffs), f"{args.out}/hourly", f"{args.out}/daily"
-    )
-    print(json.dumps({"stage": "preprocess", "daily_rows": daily_rows}))
+    print(json.dumps(energy.run_preprocess(_spark(args), args.out, args.tariffs)))
 
 
 def cmd_features(args) -> None:
-    """36+-column feature table (`feature_engineering.py:41-249`)."""
-    from smart_energy_consumption_analytics_using_big_data_spark.pipeline import energy
-    from smart_energy_consumption_analytics_using_big_data_spark.sources import writers
-
-    spark = _spark(args)
-    daily = spark.read.parquet(f"{args.out}/daily")
-    features = energy.engineer_features(daily)
-    rows = writers.write_parquet_observed(features, f"{args.out}/energy_features", _row_count())["rows"]
-    print(json.dumps({"stage": "features", "rows": rows}))
-
-
-def _ml_features(spark, out_dir: str):
-    from smart_energy_consumption_analytics_using_big_data_spark.ml import forecast as FC
-
-    daily = spark.read.parquet(f"{out_dir}/daily").select(
-        F.col("LCLid").alias("user_id"),
-        "date",
-        F.col("daily_energy_kwh").alias("label_value"),
-    )
-    return FC.add_forecast_features(daily, entity="user_id")
+    print(json.dumps(energy.run_features(_spark(args), args.out)))
 
 
 def cmd_forecast(args) -> None:
-    """Grid-searched LR vs RF, best-by-RMSE persisted with predictions
-    (`forecasting_model.py:158-606`)."""
-    from smart_energy_consumption_analytics_using_big_data_spark.ml import forecast as FC
-    from smart_energy_consumption_analytics_using_big_data_spark.sources import writers
-
-    spark = _spark(args)
-    fc = FC.train_best_forecast(_ml_features(spark, args.out), args.test_cutoff, args.val_cutoff)
-    best = fc.result
-    preds = best.predictions.select("user_id", "date", "label_value", "prediction")
-    writers.write_parquet(preds, f"{args.out}/forecasting_results", num_files=8)
-    model_dir = f"{args.out}/models/best"
-    best.model.write().overwrite().save(model_dir)
-    _write_model_metadata(model_dir, fc)
-    print(json.dumps({"stage": "forecast", "best": fc.name,
-                      "metrics": {k: round(v, 4) for k, v in best.metrics.items()}}))
-
-
-def _write_model_metadata(model_dir: str, fc) -> None:
-    """Persist best-model metadata (an `ml.forecast.BestForecast`) next
-    to the saved model (`forecasting_model.py:561-571` parity: json for
-    machines, txt with the reference's field names for humans)."""
-    import datetime
-    import pathlib
-
-    from smart_energy_consumption_analytics_using_big_data_spark.ml.forecast import FEATURE_COLS
-
-    best_name, best = fc.name, fc.result
-    meta = {
-        "best_model": best_name,
-        "metrics": {k: round(v, 6) for k, v in best.metrics.items()},
-        "best_params": best.best_params,
-        "n_features": len(FEATURE_COLS),
-        "train_records": fc.train_records,
-        "test_records": fc.test_records,
-        "trained_on": datetime.datetime.now().strftime("%Y-%m-%d %H:%M:%S"),
-    }
-    root = pathlib.Path(model_dir)
-    root.mkdir(parents=True, exist_ok=True)
-    (root / "model_metadata.json").write_text(json.dumps(meta, indent=2))
-    (root / "model_metadata.txt").write_text(
-        f"Best Model: {best_name}\n"
-        f"MAE: {best.metrics.get('mae', float('nan')):.4f}\n"
-        f"RMSE: {best.metrics.get('rmse', float('nan')):.4f}\n"
-        f"R2: {best.metrics.get('r2', float('nan')):.4f}\n"
-        f"Features Used: {len(FEATURE_COLS)}\n"
-        f"Training Records: {meta['train_records']}\n"
-        f"Test Records: {meta['test_records']}\n"
-        f"Trained On: {meta['trained_on']}\n"
-    )
+    print(json.dumps(energy.run_forecast(_spark(args), args.out, args.test_cutoff, args.val_cutoff)))
 
 
 def cmd_anomaly(args) -> None:
-    """K-Means + residual + per-cluster z-score (`anomaly_detection.py:55-196`)."""
-    from smart_energy_consumption_analytics_using_big_data_spark.ml import anomaly as AN
-    from smart_energy_consumption_analytics_using_big_data_spark.sources import writers
-
-    spark = _spark(args)
-    feats = _ml_features(spark, args.out)
-    preds = spark.read.parquet(f"{args.out}/forecasting_results").select(
-        "user_id", "date", "prediction"
-    )
-    joined = feats.join(preds, ["user_id", "date"], "left").withColumn(
-        "residual", F.abs(F.col("label_value") - F.coalesce("prediction", "label_value"))
-    )
-    scored = AN.detect_anomalies(
-        joined,
-        feature_cols=["label_value", "lag_1", "rolling_avg_7r", "day_of_week", "residual"],
-    )
-    # Rows and flags are observed in the write: any action on the lazy
-    # `scored` would run the K-Means transform + join DAG once more (the
-    # energy_bench stage-5 lesson, ADVICE r9). The file count is sized
-    # from the daily row count instead (a column-free scan of the small
-    # daily parquet), which bounds the scored rows from above.
-    daily_rows = spark.read.parquet(f"{args.out}/daily").count()
-    counts = writers.write_parquet_observed(
-        scored,
-        f"{args.out}/anomalies",
-        {**_row_count(), "flagged": F.count(F.when(F.col("is_anomaly") == 1, 1))},
-        num_files=writers.target_partitions(daily_rows),
-    )
-    print(json.dumps({"stage": "anomaly", "rows": counts["rows"], "flagged": counts["flagged"]}))
+    print(json.dumps(energy.run_anomaly(_spark(args), args.out)))
 
 
 def cmd_export(args) -> None:
     """Document-merge export (S12; `merge_csv_for_mongodb.py`)."""
-    from smart_energy_consumption_analytics_using_big_data_spark.pipeline.energy import (
-        merge_for_export,
-    )
     from smart_energy_consumption_analytics_using_big_data_spark.sources import writers
 
     spark = _spark(args)
-    anomalies = spark.read.parquet(f"{args.out}/anomalies").select(
+    anomalies = spark.read.parquet(f"{args.out}/{energy.ANOMALIES}").select(
         "user_id", "date", "cluster", "z_score", "is_anomaly"
     )
-    preds = spark.read.parquet(f"{args.out}/forecasting_results")
-    daily = spark.read.parquet(f"{args.out}/daily").select(
+    preds = spark.read.parquet(f"{args.out}/{energy.PREDICTIONS}")
+    daily = spark.read.parquet(f"{args.out}/{energy.DAILY}").select(
         F.col("LCLid").alias("user_id"), "date", "daily_energy_kwh",
         "avg_hourly_energy", "total_readings",
     )
-    merged = merge_for_export(anomalies, preds.select("user_id", "date", "prediction"),
-                              daily, keys=("user_id", "date"))
+    merged = energy.merge_for_export(anomalies, preds.select("user_id", "date", "prediction"),
+                                     daily, keys=("user_id", "date"))
     # row count observed in the write, not a second run of the 3-way join
     exported = writers.write_observed(
-        writers.write_csv, merged, f"{args.out}/export_csv", _row_count(), num_files=1
+        writers.write_csv, merged, f"{args.out}/export_csv", {"rows": F.count(F.lit(1))},
+        num_files=1,
     )["rows"]
     # MongoDB hand-off instructions, mirroring the reference's
     # create_mongodb_import_instructions (`merge_csv_for_mongodb.py:
@@ -242,13 +115,13 @@ def cmd_report(args) -> None:
     if getattr(args, "serve", False) and not args.html:
         raise SystemExit("report: --serve requires --html (the file to serve)")
     spark = _spark(args)
-    daily = spark.read.parquet(f"{args.out}/daily")
-    features = spark.read.parquet(f"{args.out}/energy_features")
+    daily = spark.read.parquet(f"{args.out}/{energy.DAILY}")
+    features = spark.read.parquet(f"{args.out}/{energy.FEATURES}")
     try:
-        anomalies = spark.read.parquet(f"{args.out}/anomalies")
+        anomalies = spark.read.parquet(f"{args.out}/{energy.ANOMALIES}")
     except Exception:
         anomalies = None
-    meta_path = pathlib.Path(f"{args.out}/models/best/model_metadata.json")
+    meta_path = pathlib.Path(f"{args.out}/{energy.MODEL}/model_metadata.json")
     metadata = _json.loads(meta_path.read_text()) if meta_path.exists() else None
     rpt = RPT.build_report(daily, features, anomalies, metadata)
     if args.csv_dir:

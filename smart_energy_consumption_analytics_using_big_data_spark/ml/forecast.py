@@ -147,7 +147,7 @@ def _split(features: DataFrame, test_cutoff) -> tuple[DataFrame, DataFrame]:
     casts other inputs (the int calendar features) under aliases that
     embed its random uid, so each `_prep` would generate and compile new
     code; with double inputs its plans repeat and hit the codegen cache.
-    (Not cast before `train_best_forecast`'s cache: `cli.cmd_anomaly`
+    (Not cast before `train_best_forecast`'s cache: `energy.run_anomaly`
     rebuilds that plan and reuses the cached rows.)"""
     features = features.withColumns({c: F.col(c).cast("double") for c in FEATURE_COLS})
     return (

@@ -4,6 +4,9 @@ Re-expresses the reference's 5 OS-process stages (`run_pipeline.ps1:
 18-40`) as library functions over one SparkSession - Parquet
 materialization between stages becomes optional instead of structural
 (SURVEY.md SS3). Each function cites the stage logic it mirrors.
+`run_ingest` ... `run_anomaly` run the five stages over one output dir
+(the artifact names below); both `cli` and the bench anchor
+(`energy_bench.run_pipeline_bench`) call them.
 
 Documented deviations from the reference (SURVEY.md SS7 "worth not
 copying"):
@@ -23,6 +26,8 @@ copying"):
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, functions as F
 
 from smart_energy_consumption_analytics_using_big_data_spark.functions import timefns as TF
@@ -33,9 +38,27 @@ from smart_energy_consumption_analytics_using_big_data_spark.operators import (
 from smart_energy_consumption_analytics_using_big_data_spark.operators.aggregates import sum_exact
 from smart_energy_consumption_analytics_using_big_data_spark.sources.schemas import (
     RAW_READING_KWH_COL,
+    READINGS_CSV_SCHEMA,
+    TARIFFS_SCHEMA,
 )
 
 LAG_DAYS = (1, 2, 3, 7, 14, 30)  # feature_engineering.py:86-89
+
+# Stage artifacts under a pipeline output dir: the parquet handoff
+# between stages, in the reference's per-process layout.
+RAW = "raw_energy_data"
+HOURLY = "hourly"
+DAILY = "daily"
+FEATURES = "energy_features"
+PREDICTIONS = "forecasting_results"
+MODEL = "models/best"
+ANOMALIES = "anomalies"
+
+
+def _row_count() -> dict:
+    """Row count observed IN a stage's write (`writers.write_observed`):
+    every stage reports its count without a read-back pass."""
+    return {"rows": F.count(F.lit(1))}
 
 
 def clean_readings(raw: DataFrame) -> DataFrame:
@@ -214,9 +237,150 @@ def preprocess_to_parquet(
     # itself in 4 tasks (86M input rows at full scale, measured ~36 s);
     # repartition keeps the agg wide and shuffles only the daily rows.
     return writers.write_parquet_observed(
-        daily, daily_path, {"rows": F.count(F.lit(1))},
-        num_files=daily_files, shuffle_for_files=True,
+        daily, daily_path, _row_count(), num_files=daily_files, shuffle_for_files=True
     )["rows"]
+
+
+def run_ingest(spark, out: str, readings: str) -> dict:
+    """Stage 1, CSV -> typed Parquet (`data_ingestion.py:40-209`): one
+    multi-path scan, explicit schema, sentinel-aware - no inferSchema
+    pass."""
+    from smart_energy_consumption_analytics_using_big_data_spark.sources import readers, writers
+
+    raw = readers.read_csv(spark, readings, READINGS_CSV_SCHEMA)
+    rows = writers.write_parquet_observed(raw, f"{out}/{RAW}", _row_count())["rows"]
+    return {"stage": "ingest", "rows": rows}
+
+
+def _load_tariffs(spark, path: str) -> DataFrame:
+    from smart_energy_consumption_analytics_using_big_data_spark.sources import readers
+
+    if path.endswith((".xlsx", ".xls")):
+        return readers.read_excel_dim(spark, path, expected_columns=["TariffDateTime", "Tariff"])
+    return readers.read_csv(spark, path, TARIFFS_SCHEMA, null_value=None)
+
+
+def run_preprocess(spark, out: str, tariffs: str) -> dict:
+    """Stage 2, clean + tariff join + hourly/daily rollups
+    (`data_preprocessing.py:88-305`); ``tariffs`` is a CSV or Excel file."""
+    daily_rows = preprocess_to_parquet(
+        spark,
+        spark.read.parquet(f"{out}/{RAW}"),
+        _load_tariffs(spark, tariffs),
+        f"{out}/{HOURLY}",
+        f"{out}/{DAILY}",
+    )
+    return {"stage": "preprocess", "daily_rows": daily_rows}
+
+
+def run_features(spark, out: str) -> dict:
+    """Stage 3, the 36+-column feature table (`feature_engineering.py:41-249`)."""
+    from smart_energy_consumption_analytics_using_big_data_spark.sources import writers
+
+    features = engineer_features(spark.read.parquet(f"{out}/{DAILY}"))
+    rows = writers.write_parquet_observed(features, f"{out}/{FEATURES}", _row_count())["rows"]
+    return {"stage": "features", "rows": rows}
+
+
+def _ml_features(spark, out: str) -> DataFrame:
+    """The forecast feature frame over the daily artifact. Stages 4 and
+    5 each build it with the same plan, so in one session stage 5 reads
+    the rows that stage 4's `train_best_forecast` cached."""
+    from smart_energy_consumption_analytics_using_big_data_spark.ml import forecast as FC
+
+    daily = spark.read.parquet(f"{out}/{DAILY}").select(
+        F.col("LCLid").alias("user_id"),
+        "date",
+        F.col("daily_energy_kwh").alias("label_value"),
+    )
+    return FC.add_forecast_features(daily, entity="user_id")
+
+
+def run_forecast(spark, out: str, test_cutoff, val_cutoff, lr_grid=None, rf_grid=None) -> dict:
+    """Stage 4, grid-searched LR vs RF, best-by-RMSE persisted with its
+    metadata and test-range predictions (`forecasting_model.py:158-606`).
+    ``lr_grid`` and ``rf_grid`` go to `ml.forecast.train_best_forecast`;
+    ``None`` keeps its defaults."""
+    from smart_energy_consumption_analytics_using_big_data_spark.ml import forecast as FC
+    from smart_energy_consumption_analytics_using_big_data_spark.sources import writers
+
+    fc = FC.train_best_forecast(
+        _ml_features(spark, out), test_cutoff, val_cutoff, lr_grid=lr_grid, rf_grid=rf_grid
+    )
+    best = fc.result
+    preds = best.predictions.select("user_id", "date", "label_value", "prediction")
+    writers.write_parquet(preds, f"{out}/{PREDICTIONS}", num_files=8)
+    best.model.write().overwrite().save(f"{out}/{MODEL}")
+    _write_model_metadata(f"{out}/{MODEL}", fc)
+    return {"stage": "forecast", "best": fc.name,
+            "metrics": {k: round(v, 4) for k, v in best.metrics.items()}}
+
+
+def _write_model_metadata(model_dir: str, fc) -> None:
+    """Persist best-model metadata (an `ml.forecast.BestForecast`) next
+    to the saved model (`forecasting_model.py:561-571` parity: json for
+    machines, txt with the reference's field names for humans)."""
+    import datetime
+    import pathlib
+
+    from smart_energy_consumption_analytics_using_big_data_spark.ml.forecast import FEATURE_COLS
+
+    best_name, best = fc.name, fc.result
+    meta = {
+        "best_model": best_name,
+        "metrics": {k: round(v, 6) for k, v in best.metrics.items()},
+        "best_params": best.best_params,
+        "n_features": len(FEATURE_COLS),
+        "train_records": fc.train_records,
+        "test_records": fc.test_records,
+        "trained_on": datetime.datetime.now().strftime("%Y-%m-%d %H:%M:%S"),
+    }
+    root = pathlib.Path(model_dir)
+    root.mkdir(parents=True, exist_ok=True)
+    (root / "model_metadata.json").write_text(json.dumps(meta, indent=2))
+    (root / "model_metadata.txt").write_text(
+        f"Best Model: {best_name}\n"
+        f"MAE: {best.metrics.get('mae', float('nan')):.4f}\n"
+        f"RMSE: {best.metrics.get('rmse', float('nan')):.4f}\n"
+        f"R2: {best.metrics.get('r2', float('nan')):.4f}\n"
+        f"Features Used: {len(FEATURE_COLS)}\n"
+        f"Training Records: {meta['train_records']}\n"
+        f"Test Records: {meta['test_records']}\n"
+        f"Trained On: {meta['trained_on']}\n"
+    )
+
+
+def run_anomaly(spark, out: str) -> dict:
+    """Stage 5, K-Means + residual + per-cluster z-score
+    (`anomaly_detection.py:55-196`) over the forecast features joined
+    to stage 4's predictions."""
+    from smart_energy_consumption_analytics_using_big_data_spark.ml import anomaly as AN
+    from smart_energy_consumption_analytics_using_big_data_spark.sources import writers
+
+    feats = _ml_features(spark, out)
+    preds = spark.read.parquet(f"{out}/{PREDICTIONS}").select("user_id", "date", "prediction")
+    joined = feats.join(preds, ["user_id", "date"], "left").withColumn(
+        "residual", F.abs(F.col("label_value") - F.coalesce("prediction", "label_value"))
+    )
+    scored = AN.detect_anomalies(
+        joined,
+        feature_cols=["label_value", "lag_1", "rolling_avg_7r", "day_of_week", "residual"],
+    )
+    # Rows and flags are observed in the write: any action on the lazy
+    # `scored` would run the K-Means transform + join DAG once more
+    # (ADVICE r9). The file count is sized from the daily row count
+    # instead (a column-free scan of the small daily parquet), which
+    # bounds the scored rows from above.
+    daily_rows = spark.read.parquet(f"{out}/{DAILY}").count()
+    counts = writers.write_parquet_observed(
+        scored,
+        f"{out}/{ANOMALIES}",
+        {**_row_count(), "flagged": F.count(F.when(F.col("is_anomaly") == 1, 1))},
+        num_files=writers.target_partitions(daily_rows),
+    )
+    # stage 4 cached these rows for this stage; nothing reads them after it
+    feats.unpersist()
+    return {"stage": "anomaly", "rows": counts["rows"], "flagged": counts["flagged"]}
 
 
 def merge_for_export(
@@ -242,11 +406,3 @@ def merge_for_export(
         daily_cols, list(keys), "left"
     )
     return merged.na.fill(0.0, ["forecast_prediction"])
-
-
-def run_pipeline(raw: DataFrame, tariffs: DataFrame) -> dict[str, DataFrame]:
-    """Stages 2-3 as one lazily-evaluated DAG; callers pick what to
-    materialize (the reference forced disk between every stage)."""
-    hourly, daily = preprocess(raw, tariffs)
-    features = engineer_features(daily)
-    return {"hourly": hourly, "daily": daily, "features": features}

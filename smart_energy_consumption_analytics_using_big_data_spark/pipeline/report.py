@@ -360,7 +360,7 @@ def build_report(
     The anomalies table and its residual frame feed ~10 independent
     panel actions. Both are persisted and materialized once, so each
     panel re-reads cached blocks instead of re-scanning the parquet
-    (the same discipline as detect_anomalies/cmd_anomaly, ADVICE r9).
+    (the same discipline as detect_anomalies/energy.run_anomaly, ADVICE r9).
     The panels then run concurrently from a small driver thread pool
     (`session.thread_map`): each is a handful of tiny jobs, and
     alone they leave most executor slots idle. The dict keeps a fixed

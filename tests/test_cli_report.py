@@ -9,8 +9,10 @@ from __future__ import annotations
 import json
 
 import pytest
+from pyspark import StorageLevel
 
 from smart_energy_consumption_analytics_using_big_data_spark import cli
+from smart_energy_consumption_analytics_using_big_data_spark.pipeline import energy
 
 
 @pytest.fixture(scope="module")
@@ -58,7 +60,7 @@ def test_forecast_grid_jobs_carry_caller_job_group(spark, pipeline_out):
     from smart_energy_consumption_analytics_using_big_data_spark.ml import forecast as FC
 
     sc = spark.sparkContext
-    feats = cli._ml_features(spark, pipeline_out).cache()
+    feats = energy._ml_features(spark, pipeline_out).cache()
     feats.count()
     tracker = sc.statusTracker()
     ungrouped = set(tracker.getJobIdsForGroup(None))
@@ -80,7 +82,7 @@ def test_best_forecast_matches_sequential_fits(spark, pipeline_out):
     metrics as fitting LR and then RF one after the other."""
     from smart_energy_consumption_analytics_using_big_data_spark.ml import forecast as FC
 
-    feats = cli._ml_features(spark, pipeline_out).cache()
+    feats = energy._ml_features(spark, pipeline_out).cache()
     try:
         lr = FC.train_linear_forecast(feats, "2013-02-20", "2013-02-10")
         rf = FC.train_rf_forecast(feats, "2013-02-20")
@@ -459,6 +461,8 @@ def test_cli_all_runs_whole_chain_in_one_invocation(
         ]
     )
     assert rc == 0
+    # the anomaly stage releases the forecast features stage 4 cached for it
+    assert energy._ml_features(spark, out).storageLevel == StorageLevel.NONE
     lines = [
         json.loads(ln)
         for ln in capsys.readouterr().out.strip().splitlines()

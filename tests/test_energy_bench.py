@@ -5,7 +5,10 @@ fields BENCH_r*.json publishes against BASELINE.md's stage table."""
 
 from __future__ import annotations
 
+import json
 import os
+
+import pytest
 
 from smart_energy_consumption_analytics_using_big_data_spark.pipeline.energy_bench import (
     make_readings_csv,
@@ -28,8 +31,6 @@ def test_fixture_is_deterministic_and_sharded(tmp_path):
 
 
 def test_pipeline_bench_rejects_unknown_grid(spark, tmp_path):
-    import pytest
-
     with pytest.raises(ValueError, match="unknown grid"):
         run_pipeline_bench(spark, str(tmp_path), households=2, grid="huge")
 
@@ -65,9 +66,14 @@ def test_pipeline_bench_runs_all_stages(spark, tmp_path):
         "daily",
         "energy_features",
         "forecasting_results",
+        "models/best",
         "anomalies",
     ):
         assert (out / artifact).is_dir()
+    # the anchor runs the shipped forecast stage, model save included
+    meta = json.loads((out / "models/best/model_metadata.json").read_text())
+    assert meta["best_model"] == res["best_model"]
+    assert meta["metrics"]["rmse"] == pytest.approx(res["rmse"], abs=1e-4)
 
 
 def test_sharded_fixture_generator(tmp_path):
@@ -100,8 +106,6 @@ def test_sharded_fixture_generator(tmp_path):
 
 
 def test_pipeline_bench_rejects_unknown_generator(spark, tmp_path):
-    import pytest
-
     with pytest.raises(ValueError, match="unknown generator"):
         run_pipeline_bench(spark, str(tmp_path), households=2, generator="gpu")
 
