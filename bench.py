@@ -87,7 +87,7 @@ BENCH_QUERIES = [
 # (r16: an xxhash64 fast twin of q_dedup_minhash_lsh was registered,
 # measured, and REVERTED — the signature stage is shingle-build-bound,
 # not digest-bound, so the twin was a wash-to-slower;
-# scripts/probe_r16_minhash_fast_ab.py is the record.)
+# OPTIMIZATION_r16.md "Negative results" item 1 is the record.)
 DIAGNOSTIC_QUERIES = [
     "q_dedup_winnow",
     "q_dedup_winnow_fast",

@@ -1,8 +1,9 @@
 """Capture `.explain("formatted")` for bench queries into
-plans/r16/<name>_<tag>.txt (tag = before/after), plus a one-line shape
+plans/<round>/<name>_<tag>.txt (tag = before/after), plus a one-line shape
 summary (Exchange count, join strategies, Python-eval nodes) to stdout.
 
-Usage: python scripts/capture_plans_r16.py [before|after] [sf_dir] [names...]
+Usage: python scripts/capture_plans.py <round> [before|after] [sf_dir] [names...]
+  e.g. python scripts/capture_plans.py r17 after
 """
 
 from __future__ import annotations
@@ -42,16 +43,19 @@ def shape_summary(text: str) -> str:
 
 
 def main() -> None:
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    round_name = sys.argv.pop(1)
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     import bench
 
     names = sys.argv[3:] or (bench.BENCH_QUERIES + bench.DIAGNOSTIC_QUERIES)
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r16"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", round_name
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("capture-plans-r16")
+    spark = get_spark(f"capture-plans-{round_name}")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         try:

@@ -101,14 +101,14 @@ PROBE = [
     # round-12: the remaining untested clever shapes (VERDICT r11
     # item 4) — degree-oriented triangle counting (lineitem 10x; the
     # arboricity-bound wedge join) and the salted two-stage kNN join
-    # (embeddings 100x; scripts/probe_r12_shapes.py holds the salt-
+    # (embeddings 100x; PERFORMANCE.md "Round 12" records the salt-
     # width A/B and hub-skew companions)
     "q_graph_triangles",
     "q_sim_knn_join",
     # round-14: the transformWithState surface (events 100x churn-mode:
     # keys x100, per-key state constant). The orthogonal state-DEPTH
-    # axis (same keys, open-session ListState x100 deep) lives in
-    # scripts/probe_r14_streaming.py — both measured sublinear r14
+    # axis (same keys, open-session ListState x100 deep) is recorded in
+    # PERFORMANCE.md "Round 14" — both measured sublinear r14
     # (sessions 39x/17x, wm-TTL 19x/3x at 100x data).
     "q_stream_sessions_timer",
     "q_stream_ttl_expiry",

@@ -295,8 +295,9 @@ def minhash_signatures(shingles: DataFrame, num_hashes: int = 6) -> DataFrame:
     (r16 note: an xxhash64 fast variant was implemented, measured, and
     reverted — the signature stage is shingle-build-bound, not
     digest-bound, so the native hash bought ~5% of the stage and
-    nothing on the full query; scripts/probe_r16_minhash_fast_ab.py is
-    the record and keeps the variant expression for a future revisit.)
+    nothing on the full query; OPTIMIZATION_r16.md "Negative results"
+    item 1 is the record, and the variant expression is in git history
+    for a future revisit.)
     """
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle")))).alias(f"mh_{i}")
@@ -688,7 +689,7 @@ def winnow_pairs(
     both fingerprint producers emit distinct (doc, fp); the sorted
     upper triangle IS the doc_a < doc_b join output; the explicit
     non-null fp filter mirrors the inner equi-join. Interleaved A/B at
-    sf0.1 (scripts/probe_r15_winnow_pairs_ab.py): arrow 2.25 -> 1.66 s
+    sf0.1 (OPTIMIZATION_r15.md, shipped item 7): arrow 2.25 -> 1.66 s
     median (5/5), xxhash64 4.84 -> 4.12 (5/5), md5 a wash (digest-
     bound).
 
@@ -703,12 +704,16 @@ def winnow_pairs(
     ever buffered. Output-identical (rows-per-fp == size(collect_set),
     so dropping groups before the collect == the size filter after;
     exceptAll 0 both ways on all three hash paths,
-    scripts/probe_r16_winnow_gate_ab.py). The fps subtree is consumed
-    twice (the r15 checkpoint probe measured recompute cheaper than
-    caching the corpus-sized table), costing ~5-10%% at sf0.1 — so
-    callers gate it on corpus size, the q_sql_min_cost_supplier
-    pattern: robustness is only needed where the data is big enough to
-    carry a degenerate fp."""
+    OPTIMIZATION_r16.md shipped item 3). The fps subtree has two
+    consumers, but AQE reuses the fingerprint stage's distinct exchange
+    for the second, so the Arrow kernel still runs once (the
+    pre-execution plan shows it twice); repartitioning fps by fp to
+    share one exchange measured slower (1/10 pairs). The count gate and
+    semi join still cost about a fifth of the query at sf0.1: arrow
+    1.35 -> 1.61 s median (guard won 1/10 pairs), shuffle write 1.0 ->
+    3.1 MiB (PERFORMANCE.md, "One A/B harness") — so callers gate it on
+    corpus size, the q_sql_min_cost_supplier pattern: robustness is
+    only needed where the data is big enough to carry a degenerate fp."""
     if hash_fn == "arrow":
         fps = winnow_fingerprints_arrow(docs, k, w, text_col, id_col)
     else:

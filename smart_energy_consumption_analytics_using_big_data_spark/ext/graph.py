@@ -78,7 +78,7 @@ def bfs_hops(
     are fixed overhead that loses at sf0.1 (rotated interleaved A/B
     1/6, +10%) but wins on the 10x derived co-purchase graph (4-6/6,
     median 6.69 -> 5.98 s; persisting ~24M edge rows vs ~200k array
-    rows — scripts/probe_r16_bfs_adj_ab.py), so callers gate it on
+    rows — OPTIMIZATION_r16.md, shipped item 2), so callers gate it on
     input size. Scale caveat: a hub node's full neighbor set sits in
     one aggregation buffer (the standard adjacency-list trade); the
     edge-row path has no such buffer, which is one more reason the
@@ -358,9 +358,7 @@ def copurchase_pairs(
     return basket_pairs(order_baskets(df, group_col, item_col), directed=directed)
 
 
-def oriented_triangles(
-    edges: DataFrame, canonicalize: bool = False, checkpoint_storage=None
-) -> DataFrame:
+def oriented_triangles(edges: DataFrame, canonicalize: bool = False) -> DataFrame:
     """Triangle instances of an undirected simple graph via DEGREE
     ORIENTATION: each edge (u,v) points from its lower-(degree, id)
     endpoint to the higher one, then triangles are wedges (lo->a,
@@ -419,10 +417,8 @@ def oriented_triangles(
     # construction time; not persist(), so the ContextCleaner reclaims
     # the blocks when the returned plan is dropped — the dsir_select
     # lifecycle pattern (ADVICE r3), no session cache-entry leak.
-    # checkpoint_storage: analysis knob for the storage-level A/B
-    # (scripts/probe_r13_drift.py) — None keeps Spark's default
-    # local-checkpoint level, so query plans are unaffected.
-    oriented = oriented.localCheckpoint(eager=False, storageLevel=checkpoint_storage)
+    # No storage level beat the default (PERFORMANCE.md, Round 13).
+    oriented = oriented.localCheckpoint(eager=False)
     e1, e2, e3 = oriented.alias("e1"), oriented.alias("e2"), oriented.alias("e3")
     return (
         e1.join(e2, F.col("e2.lo") == F.col("e1.hi"))

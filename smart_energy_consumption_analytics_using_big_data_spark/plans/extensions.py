@@ -1600,7 +1600,7 @@ def q_join_fuzzy(spark, sf_dir):
 
 def _winnow_skew_guard(spark, sf_dir) -> bool:
     """Size gate for winnow_pairs' count-gated collect (r16): the
-    guard's extra fps pass costs ~5-10% at sf0.1 and buys bounded
+    guard's count gate and semi join cost ~20% at sf0.1 and buy bounded
     aggregation buffers, so it turns on only where a degenerate
     boilerplate fingerprint could actually carry an OOM-sized doc set.
     Threshold override: SPARK_GRAFT_WINNOW_GUARD_BYTES (same pattern as
@@ -1813,9 +1813,9 @@ def q_graph_bfs(spark, sf_dir):
     edges into per-node adjacency arrays when the fact table clears a
     size gate, so the rounds join |V| rows instead of |E| — results
     byte-identical, crossover measured between 11 MB (sf0.1, slower)
-    and 103 MB (10x graph, faster) in
-    scripts/probe_r16_bfs_adj_ab.py; `SPARK_GRAFT_BFS_ADJ_BYTES`
-    overrides the threshold for cluster deployments.)"""
+    and 103 MB (10x graph, faster), OPTIMIZATION_r16.md shipped item 2;
+    `SPARK_GRAFT_BFS_ADJ_BYTES` overrides the threshold for cluster
+    deployments.)"""
     import os as _os
 
     from smart_energy_consumption_analytics_using_big_data_spark.ext.graph import (

@@ -858,7 +858,7 @@ def q_sql_min_cost_supplier(spark, sf_dir):
     aggregation shuffles (-97% fact rows into them) — but the two
     extra part scans/broadcast builds are fixed overhead that measured
     5/5 SLOWER at sf0.1 (0.90 -> 1.20 s) and 4/4 FASTER at 10x
-    (2.77 -> 1.93 s, scripts/probe_r15_mcs_scale.py). So the Spark
+    (2.77 -> 1.93 s, OPTIMIZATION_r15.md shipped item 6). So the Spark
     text applies the pre-filter only when the fact table's on-storage
     size clears a threshold between those two measured points (64 MB;
     sf0.1 is 11 MB, the 10x probe 108 MB) — a manual cost-based plan

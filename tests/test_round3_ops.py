@@ -208,7 +208,11 @@ def test_winnow_skew_guard_output_identical_and_count_gated(spark):
     plan (so no over-max_df doc array is ever buffered), and must
     complete on a skew-ramped fixture where one fingerprint family is
     shared by 10^4 docs (the hot fps die at the count gate, never
-    collected)."""
+    collected). On the arrow path the guard must not run the Arrow
+    kernel more often than the unguarded shape: AQE reuses the
+    fingerprint stage's exchange for the guard's second consumer, so
+    both executed plans hold one MapInPandas (ext/dedup.winnow_pairs
+    docstring; a repartition by fp measured slower and did not ship)."""
     from pyspark.sql import functions as F
 
     from smart_energy_consumption_analytics_using_big_data_spark.ext.dedup import winnow_pairs
@@ -219,12 +223,21 @@ def test_winnow_skew_guard_output_identical_and_count_gated(spark):
         [(1, base), (2, base), (3, near), (4, "totally different content here " * 4)],
         "doc_id long, text string",
     )
-    for hash_fn in ("md5", "xxhash64"):
-        a = sorted(map(tuple, winnow_pairs(docs, hash_fn=hash_fn).collect()))
-        b = sorted(
-            map(tuple, winnow_pairs(docs, hash_fn=hash_fn, skew_guard=True).collect())
-        )
+    executed = {}
+    for hash_fn in ("md5", "xxhash64", "arrow"):
+        plain = winnow_pairs(docs, hash_fn=hash_fn)
+        guarded = winnow_pairs(docs, hash_fn=hash_fn, skew_guard=True)
+        a = sorted(map(tuple, plain.collect()))
+        b = sorted(map(tuple, guarded.collect()))
         assert a == b and len(a) > 0, hash_fn
+        executed[hash_fn] = plain, guarded
+
+    def kernel_runs(df) -> int:
+        final = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+        return final.count("MapInPandas")
+
+    plain, guarded = executed["arrow"]
+    assert kernel_runs(guarded) == kernel_runs(plain) == 1
 
     # plan property: the guarded shape joins the fps against the
     # count-gate BEFORE any collect_set buffers docs
