@@ -271,7 +271,13 @@ def run_scale() -> None:
     Window/projection subtrees. Fixtures are built once into
     $SPARK_GRAFT_SCALE_DIR (default /tmp/spark_graft_scale_probe) and
     reused, so a c8 run and a c32 run measure identical bytes."""
-    from pyspark.sql import functions as F
+    from unittest import mock
+
+    from smart_energy_consumption_analytics_using_big_data_spark.sources.catalog import (
+        SIZE_GATES,
+        size_gate,
+        size_gate_env,
+    )
 
     out_dir = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/spark_graft_scale_probe")
     spark = get_spark("bench-scale")
@@ -279,14 +285,10 @@ def run_scale() -> None:
     sys.path.insert(
         0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts")
     )
-    from scale_probe import build_derived
+    from scale_probe import build_derived, force
 
     if not os.path.isdir(os.path.join(out_dir, "events.parquet")):
         build_derived(spark, out_dir)
-
-    def force(df) -> None:
-        h = F.pmod(F.xxhash64(*df.columns), F.lit(1_000_003))
-        df.agg(F.sum(h)).collect()
 
     # rep-count override for interleaved cross-core-count measurement:
     # alternating single-rep c32/c8 SESSIONS cancels the hour-scale
@@ -296,9 +298,17 @@ def run_scale() -> None:
     # scaling).
     reps = int(os.environ.get("SPARK_GRAFT_SCALE_REPS", SCALE_REPS))
     samples: dict[str, list[float]] = {name: [] for name in SCALE_QUERIES}
-    for name in SCALE_QUERIES:  # plan-shape warm-up at the small SF
-        force(QUERIES[name](spark, "/root/testdata/sf0.001"))
-        spark.catalog.clearCache()
+    # plan-shape warm-up at the small SF, with each size gate forced to
+    # the branch it takes on the scale fixtures (sf0.001 alone would
+    # warm every gate's small-table branch)
+    warm_gates = {
+        size_gate_env(g): "0" if size_gate(spark, out_dir, g) else str(2**62)
+        for g in SIZE_GATES
+    }
+    with mock.patch.dict(os.environ, warm_gates):
+        for name in SCALE_QUERIES:
+            force(QUERIES[name](spark, "/root/testdata/sf0.001"))
+            spark.catalog.clearCache()
     for _rep in range(reps):
         for name in SCALE_QUERIES:
             spark.sparkContext.setJobDescription(f"scale {name}")

@@ -9,8 +9,9 @@ taking ``(spark, sf_dir)`` and returning a DataFrame, followed by optional
     python scripts/ab.py SF_DIR "q_graph_bfs SPARK_GRAFT_BFS_ADJ_BYTES=0" q_graph_bfs --reps 6
 
 The overrides are set only while the DataFrame is built and restored
-afterwards: the size gates (``SPARK_GRAFT_*_BYTES``) read them at build
-time, and nothing else should see them.
+afterwards: ``sources/catalog.size_gate`` reads each ``SIZE_GATES``
+threshold (``SPARK_GRAFT_{NAME}_BYTES``) at build time, and nothing else
+should see them.
 
 The protocol runs once, in one session:
 

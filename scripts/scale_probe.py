@@ -19,6 +19,7 @@ Usage: python scripts/scale_probe.py [out_dir]
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
@@ -26,7 +27,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from smart_energy_consumption_analytics_using_big_data_spark import get_spark
 from smart_energy_consumption_analytics_using_big_data_spark.plans import QUERIES
@@ -125,101 +126,64 @@ RATIO_OVERRIDES = {
 }
 
 
+def force(df) -> None:
+    """Execute every column of `df`: one row hash over all of them,
+    modded before the sum so the ANSI long sum cannot overflow."""
+    h = F.pmod(F.xxhash64(*df.columns), F.lit(1_000_003))
+    df.agg(F.sum(h)).collect()
+
+
+def _shift(col: str, i: int, step: int):
+    return (F.col(col) + F.lit(i * step)).alias(col)
+
+
+def _suffix(col: str, suffix: str):
+    return F.concat(F.col(col), F.lit(suffix)).alias(col)
+
+
+def _replicate(spark, out_dir: str, name: str, replicas: int, project) -> None:
+    """Write `replicas` copies of the sf0.1 table `name`, unioned, to
+    out_dir; `project(i)` is replica i's select list."""
+    df = load_table(spark, SF01, name)
+    parts = [df.select(*project(i)) for i in range(replicas)]
+    big = functools.reduce(DataFrame.unionByName, parts)
+    big.write.mode("overwrite").parquet(f"{out_dir}/{name}.parquet")
+
+
 def build_derived(spark, out_dir: str) -> None:
     """events x{REPLICAS} (ids and users shifted per replica so
     cardinalities scale too), documents x{REPLICAS_DOCS} (doc_id
     shifted; text perturbed with a replica token so dedup does not
-    degenerate to exact copies)."""
-    ev = load_table(spark, SF01, "events")
-    ev_parts = [
-        ev.select(
-            (F.col("event_id") + F.lit(i * 10_000_000)).alias("event_id"),
-            "ts",
-            (F.col("user_id") + F.lit(i * 1_000_000)).alias("user_id"),
-            "event_type",
-            "value",
-            "props",
-        )
-        for i in range(REPLICAS)
-    ]
-    big_ev = ev_parts[0]
-    for p in ev_parts[1:]:
-        big_ev = big_ev.unionByName(p)
-    big_ev.write.mode("overwrite").parquet(f"{out_dir}/events.parquet")
-
-    docs = load_table(spark, SF01, "documents")
-    d_parts = [
-        docs.select(
-            (F.col("doc_id") + F.lit(i * 1_000_000)).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(f" replica{i}")).alias("text"),
-            "lang",
-            "source",
-            "n_chars",
-        )
-        for i in range(REPLICAS_DOCS)
-    ]
-    big_d = d_parts[0]
-    for p in d_parts[1:]:
-        big_d = big_d.unionByName(p)
-    big_d.write.mode("overwrite").parquet(f"{out_dir}/documents.parquet")
-    emb = load_table(spark, SF01, "embeddings")
-    e_parts = [
-        emb.select(
-            (F.col("vec_id") + F.lit(i * 1_000_000)).alias("vec_id"),
-            "embedding",
-            "label",
-        )
-        for i in range(REPLICAS_EMB)
-    ]
-    big_e = e_parts[0]
-    for p in e_parts[1:]:
-        big_e = big_e.unionByName(p)
-    big_e.write.mode("overwrite").parquet(f"{out_dir}/embeddings.parquet")
+    degenerate to exact copies), embeddings x{REPLICAS_EMB}."""
+    _replicate(spark, out_dir, "events", REPLICAS, lambda i: [
+        _shift("event_id", i, 10_000_000), "ts", _shift("user_id", i, 1_000_000),
+        "event_type", "value", "props",
+    ])
+    _replicate(spark, out_dir, "documents", REPLICAS_DOCS, lambda i: [
+        _shift("doc_id", i, 1_000_000), _suffix("text", f" replica{i}"),
+        "lang", "source", "n_chars",
+    ])
+    _replicate(spark, out_dir, "embeddings", REPLICAS_EMB, lambda i: [
+        _shift("vec_id", i, 1_000_000), "embedding", "label",
+    ])
     # customer x{REPLICAS_DOCS} with a replica suffix on the name: the
     # within-replica ED1 structure is preserved and replicas of the
     # SAME customer differ only in the suffix digit (also ED1), so the
     # fuzzy graph grows in both nodes and cross-replica edges — a
     # deliberately harsher BFS/pagerank scale point than pure
     # disjoint-union replication
-    cust = load_table(spark, SF01, "customer")
-    c_parts = [
-        cust.select(
-            (F.col("c_custkey") + F.lit(i * 1_000_000)).alias("c_custkey"),
-            F.concat(F.col("c_name"), F.lit(f" r{i}")).alias("c_name"),
-            "c_nationkey",
-            "c_acctbal",
-            "c_mktsegment",
-        )
-        for i in range(REPLICAS_DOCS)
-    ]
-    big_c = c_parts[0]
-    for p in c_parts[1:]:
-        big_c = big_c.unionByName(p)
-    big_c.write.mode("overwrite").parquet(f"{out_dir}/customer.parquet")
+    _replicate(spark, out_dir, "customer", REPLICAS_DOCS, lambda i: [
+        _shift("c_custkey", i, 1_000_000), _suffix("c_name", f" r{i}"),
+        "c_nationkey", "c_acctbal", "c_mktsegment",
+    ])
     # lineitem x{REPLICAS_DOCS} with shifted order AND part keys: the
     # co-purchase graph (BFS / neighbor-Jaccard probes) scales in
     # orders, parts, and edges while replicas stay disjoint components
-    li = load_table(spark, SF01, "lineitem")
-    l_parts = [
-        li.select(
-            (F.col("l_orderkey") + F.lit(i * 100_000_000)).alias("l_orderkey"),
-            (F.col("l_partkey") + F.lit(i * 10_000_000)).alias("l_partkey"),
-            "l_suppkey",
-            "l_linenumber",
-            "l_quantity",
-            "l_extendedprice",
-            "l_discount",
-            "l_tax",
-            "l_returnflag",
-            "l_linestatus",
-            "l_shipdate",
-        )
-        for i in range(REPLICAS_DOCS)
-    ]
-    big_l = l_parts[0]
-    for p in l_parts[1:]:
-        big_l = big_l.unionByName(p)
-    big_l.write.mode("overwrite").parquet(f"{out_dir}/lineitem.parquet")
+    _replicate(spark, out_dir, "lineitem", REPLICAS_DOCS, lambda i: [
+        _shift("l_orderkey", i, 100_000_000), _shift("l_partkey", i, 10_000_000),
+        "l_suppkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_discount",
+        "l_tax", "l_returnflag", "l_linestatus", "l_shipdate",
+    ])
 
 
 def main() -> None:
@@ -228,12 +192,6 @@ def main() -> None:
     spark = get_spark("scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
     build_derived(spark, out_dir)
-
-    def force(df) -> None:
-        # one row hash over every column, modded before the sum so the
-        # ANSI long sum cannot overflow
-        h = F.pmod(F.xxhash64(*df.columns), F.lit(1_000_003))
-        df.agg(F.sum(h)).collect()
 
     report = {}
     for name in names:

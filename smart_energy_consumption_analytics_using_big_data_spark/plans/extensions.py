@@ -18,6 +18,7 @@ from smart_energy_consumption_analytics_using_big_data_spark.functions import te
 from smart_energy_consumption_analytics_using_big_data_spark.pipeline import corpus as C
 from smart_energy_consumption_analytics_using_big_data_spark.operators.aggregates import sum_exact
 from smart_energy_consumption_analytics_using_big_data_spark.plans._registry import DSUM, q, t
+from smart_energy_consumption_analytics_using_big_data_spark.sources.catalog import size_gate
 
 # ---------------------------------------------------------------------------
 # dedup
@@ -1598,26 +1599,6 @@ def q_join_fuzzy(spark, sf_dir):
     return J.fuzzy_join_ed1(c, c, "c_custkey", "c_name", "c_custkey", "c_name")
 
 
-def _winnow_skew_guard(spark, sf_dir) -> bool:
-    """Size gate for winnow_pairs' count-gated collect (r16): the
-    guard's count gate and semi join cost ~20% at sf0.1 and buy bounded
-    aggregation buffers, so it turns on only where a degenerate
-    boilerplate fingerprint could actually carry an OOM-sized doc set.
-    Threshold override: SPARK_GRAFT_WINNOW_GUARD_BYTES (same pattern as
-    the q_sql_min_cost_supplier pre-filter gate)."""
-    import os as _os
-
-    from smart_energy_consumption_analytics_using_big_data_spark.sources.catalog import (
-        table_size_bytes,
-    )
-
-    threshold = int(
-        _os.environ.get("SPARK_GRAFT_WINNOW_GUARD_BYTES", 64 * 1024 * 1024)
-    )
-    n = table_size_bytes(spark, sf_dir, "documents")
-    return n is not None and n >= threshold
-
-
 @q(
     "q_dedup_winnow",
     """
@@ -1651,9 +1632,13 @@ def q_dedup_winnow(spark, sf_dir):
     common fingerprint, at ~1/w the index of all-grams - the
     suffix-array-free way to run Lee et al.-style substring dedup as a
     pure equi-join pipeline. Boilerplate fingerprints df-pruned before
-    the pair join."""
+    the pair join. winnow_pairs' count-gated collect (skew_guard, r16)
+    costs ~20% at sf0.1 and buys bounded aggregation buffers, so the
+    `winnow_guard` size gate (sources/catalog.SIZE_GATES) turns it on
+    only where a degenerate boilerplate fingerprint could carry an
+    OOM-sized doc set; the fast and arrow variants share the gate."""
     return D.winnow_pairs(
-        t(spark, sf_dir, "documents"), skew_guard=_winnow_skew_guard(spark, sf_dir)
+        t(spark, sf_dir, "documents"), skew_guard=size_gate(spark, sf_dir, "winnow_guard")
     )
 
 
@@ -1814,16 +1799,10 @@ def q_graph_bfs(spark, sf_dir):
     size gate, so the rounds join |V| rows instead of |E| — results
     byte-identical, crossover measured between 11 MB (sf0.1, slower)
     and 103 MB (10x graph, faster), OPTIMIZATION_r16.md shipped item 2;
-    `SPARK_GRAFT_BFS_ADJ_BYTES` overrides the threshold for cluster
-    deployments.)"""
-    import os as _os
-
+    the `bfs_adj` entry of sources/catalog.SIZE_GATES.)"""
     from smart_energy_consumption_analytics_using_big_data_spark.ext.graph import (
         bfs_hops,
         copurchase_pairs,
-    )
-    from smart_energy_consumption_analytics_using_big_data_spark.sources.catalog import (
-        table_size_bytes,
     )
 
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -1837,10 +1816,6 @@ def q_graph_bfs(spark, sf_dir):
         ).alias("e")
     ).select("e.src", "e.dst")
 
-    threshold = int(
-        _os.environ.get("SPARK_GRAFT_BFS_ADJ_BYTES", 64 * 1024 * 1024)
-    )
-    li_bytes = table_size_bytes(spark, sf_dir, "lineitem")
     # symmetric_edges: this query explodes both orientations itself two
     # lines up, so the src-only seed scan is provably complete
     return bfs_hops(
@@ -1849,7 +1824,7 @@ def q_graph_bfs(spark, sf_dir):
         max_hops=4,
         dedupe=True,
         symmetric_edges=True,
-        adjacency=li_bytes is not None and li_bytes >= threshold,
+        adjacency=size_gate(spark, sf_dir, "bfs_adj"),
     )
 
 
@@ -2168,7 +2143,7 @@ def q_dedup_winnow_fast(spark, sf_dir):
     return D.winnow_pairs(
         t(spark, sf_dir, "documents"),
         hash_fn="xxhash64",
-        skew_guard=_winnow_skew_guard(spark, sf_dir),
+        skew_guard=size_gate(spark, sf_dir, "winnow_guard"),
     )
 
 
@@ -2185,7 +2160,7 @@ def q_dedup_winnow_arrow(spark, sf_dir):
     return D.winnow_pairs(
         t(spark, sf_dir, "documents"),
         hash_fn="arrow",
-        skew_guard=_winnow_skew_guard(spark, sf_dir),
+        skew_guard=size_gate(spark, sf_dir, "winnow_guard"),
     )
 
 

@@ -10,7 +10,10 @@ DuckDB type-normalization casts.
 from __future__ import annotations
 
 from smart_energy_consumption_analytics_using_big_data_spark.plans._registry import DSUM, q
-from smart_energy_consumption_analytics_using_big_data_spark.sources.catalog import register_views
+from smart_energy_consumption_analytics_using_big_data_spark.sources.catalog import (
+    register_views,
+    size_gate,
+)
 
 
 @q(
@@ -863,25 +866,15 @@ def q_sql_min_cost_supplier(spark, sf_dir):
     size clears a threshold between those two measured points (64 MB;
     sf0.1 is 11 MB, the 10x probe 108 MB) — a manual cost-based plan
     choice, identical output on both branches, each branch
-    oracle-verified. `SPARK_GRAFT_MCS_PREFILTER_BYTES` overrides the
-    threshold for cluster deployments."""
-    import os as _os
-
-    from smart_energy_consumption_analytics_using_big_data_spark.sources.catalog import (
-        table_size_bytes,
-    )
-
+    oracle-verified: the `mcs_prefilter` entry of
+    sources/catalog.SIZE_GATES."""
     register_views(spark, sf_dir)
-    threshold = int(
-        _os.environ.get("SPARK_GRAFT_MCS_PREFILTER_BYTES", 64 * 1024 * 1024)
-    )
-    li_bytes = table_size_bytes(spark, sf_dir, "lineitem")
     prefilter = (
         """
             AND l_partkey IN (
               SELECT p_partkey FROM part WHERE p_size < 10 AND p_type = 'SMALL')
         """
-        if li_bytes is not None and li_bytes >= threshold
+        if size_gate(spark, sf_dir, "mcs_prefilter")
         else ""
     )
     return spark.sql(

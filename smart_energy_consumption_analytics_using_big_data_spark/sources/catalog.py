@@ -8,7 +8,12 @@ SQL views, so DataFrame and ``spark.sql`` programs share one surface.
 
 from __future__ import annotations
 
+import logging
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+log = logging.getLogger(__name__)
 
 TESTDATA_TABLES: tuple[str, ...] = (
     "region",
@@ -81,11 +86,10 @@ def table_size_bytes(spark: SparkSession, sf_dir: str, name: str) -> int | None:
 
     Goes through the Hadoop FileSystem API so it works for any scheme
     Spark can read (local, HDFS, s3a), not just the local filesystem.
-    Used for manual cost-based plan choices (e.g. the
-    q_sql_min_cost_supplier offers pre-filter, OPTIMIZATION_r15.md):
-    the same role table statistics play for Catalyst's own join
-    planning, exposed where a query builder needs the decision before
-    the optimizer sees the plan."""
+    The input of every `SIZE_GATES` decision (`size_gate`): the same
+    role table statistics play for Catalyst's own join planning,
+    exposed where a query builder needs the decision before the
+    optimizer sees the plan."""
     try:
         sc = spark.sparkContext
         path = sc._jvm.org.apache.hadoop.fs.Path(f"{sf_dir}/{name}.parquet")
@@ -93,6 +97,55 @@ def table_size_bytes(spark: SparkSession, sf_dir: str, name: str) -> int | None:
         return int(fs.getContentSummary(path).getLength())
     except Exception:  # noqa: BLE001 - size is advisory, never fatal
         return None
+
+
+# Manual cost-based plan choices: gate name -> the table whose
+# on-storage size decides it. Each gate turns its branch on when that
+# table holds at least SIZE_GATE_DEFAULT_BYTES, overridden per gate by
+# the env variable `size_gate_env(name)` (SPARK_GRAFT_{NAME}_BYTES);
+# both branches of every gate return identical rows.
+# - mcs_prefilter: q_sql_min_cost_supplier's offers pre-filter
+#   (OPTIMIZATION_r15.md shipped item 6).
+# - winnow_guard: winnow_pairs' count-gated collect in q_dedup_winnow,
+#   q_dedup_winnow_fast and q_dedup_winnow_arrow (r16).
+# - bfs_adj: q_graph_bfs's adjacency fold (OPTIMIZATION_r16.md shipped
+#   item 2). It guards the derived edge table but reads lineitem: the
+#   crossover was measured in lineitem bytes (sf0.1 at 11 MB slower,
+#   the 10x graph at 103 MB faster), and the edge table's size is not
+#   known before the query runs.
+SIZE_GATES: dict[str, str] = {
+    "mcs_prefilter": "lineitem",
+    "winnow_guard": "documents",
+    "bfs_adj": "lineitem",
+}
+SIZE_GATE_DEFAULT_BYTES = 64 * 1024 * 1024
+
+
+def size_gate_env(name: str) -> str:
+    """The env variable that overrides gate `name`'s byte threshold."""
+    return f"SPARK_GRAFT_{name.upper()}_BYTES"
+
+
+def size_gate(spark: SparkSession, sf_dir: str, name: str) -> bool:
+    """Decide the `SIZE_GATES` entry `name` for the tables in `sf_dir`:
+    True when its table's on-storage size reaches the threshold. A
+    table the filesystem cannot size counts as small. Stats the table
+    once and logs the gate, byte count, threshold and decision at
+    INFO. A non-integer override raises ValueError naming its
+    variable."""
+    var = size_gate_env(name)
+    raw = os.environ.get(var)
+    try:
+        threshold = SIZE_GATE_DEFAULT_BYTES if raw is None else int(raw)
+    except ValueError:
+        raise ValueError(f"{var} must be an integer byte count, got {raw!r}") from None
+    n = table_size_bytes(spark, sf_dir, SIZE_GATES[name])
+    on = n is not None and n >= threshold
+    log.info(
+        "size gate %s: %s bytes=%s threshold=%d -> %s",
+        name, SIZE_GATES[name], n, threshold, "on" if on else "off",
+    )
+    return on
 
 
 def load_time_range(

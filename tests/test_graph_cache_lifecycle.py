@@ -159,23 +159,3 @@ def test_bfs_adjacency_symmetric_seed_path(spark):
     b.unpersist()
     assert ra == rb and len(ra) > 0
 
-
-def test_graph_bfs_query_size_gate(spark, monkeypatch):
-    """q_graph_bfs turns the adjacency fold on only past the fact-size
-    gate: at testdata scale the plan keeps the edge-row build (no
-    collect_set in the edge prep), with the env override forcing the
-    fold on for the scale path — both branches produce identical rows
-    (the oracle re-proves values; this pins the gating itself)."""
-    from smart_energy_consumption_analytics_using_big_data_spark.plans import QUERIES
-
-    sf = "/root/testdata/sf0.001"
-    monkeypatch.delenv("SPARK_GRAFT_BFS_ADJ_BYTES", raising=False)
-    off = QUERIES["q_graph_bfs"](spark, sf)
-    rows_off = sorted(map(tuple, off.collect()))
-    off.unpersist()
-    monkeypatch.setenv("SPARK_GRAFT_BFS_ADJ_BYTES", "1")  # force the fold on
-    on = QUERIES["q_graph_bfs"](spark, sf)
-    rows_on = sorted(map(tuple, on.collect()))
-    on.unpersist()
-    spark.catalog.clearCache()
-    assert rows_off == rows_on and len(rows_off) > 0

@@ -599,28 +599,3 @@ def test_write_parquet_shuffle_for_files(spark, tmp_path):
     b = {(r["k"], r["count"]) for r in spark.read.parquet(p2).collect()}
     assert a == b and len(a) == 7
 
-
-def test_min_cost_supplier_size_gated_prefilter(spark, monkeypatch):
-    """The r15 size-gated offers pre-filter (plans/sqltext.py): below the
-    size threshold the CTE aggregates all lineitem rows (the measured-
-    faster shape at bench scale); forcing the threshold to 0 plans the
-    part semi-join BELOW the offers aggregation and returns identical
-    rows — the manual cost-based plan choice never changes the result."""
-    from smart_energy_consumption_analytics_using_big_data_spark.sources.catalog import (
-        table_size_bytes,
-    )
-
-    size = table_size_bytes(spark, SF_SMOKE, "lineitem")
-    assert isinstance(size, int) and size > 0
-    assert table_size_bytes(spark, SF_SMOKE, "no_such_table") is None
-
-    monkeypatch.delenv("SPARK_GRAFT_MCS_PREFILTER_BYTES", raising=False)
-    base = QUERIES["q_sql_min_cost_supplier"](spark, SF_SMOKE)
-    assert "LeftSemi" not in _formatted_plan(base)  # sf0.001 is far below 64 MB
-
-    monkeypatch.setenv("SPARK_GRAFT_MCS_PREFILTER_BYTES", "0")
-    gated = QUERIES["q_sql_min_cost_supplier"](spark, SF_SMOKE)
-    plan = _formatted_plan(gated)
-    assert "LeftSemi" in plan  # the pre-filter reached the physical plan
-    assert base.exceptAll(gated).count() == 0
-    assert gated.exceptAll(base).count() == 0
